@@ -1,27 +1,37 @@
 """Distributed gradient-boosted-tree train/predict (SURVEY.md §2F).
 
-Re-expresses the reference's entire ML surface on Spark MLlib:
+Re-expresses the reference's entire ML surface on Spark:
 
 - ``train(params, df, ...)`` mirrors ``dask_xgboost.train``
   (reference core.py:268-321): blocking call, returns a fitted model.
-  The reference's orchestration — partition triads, who_has locality
-  pinning, Rabit tracker bootstrap, gang scheduling, rank-0 result
-  dedup (core.py:164-265, tracker.py) — is all subsumed by MLlib's
-  ``.fit()``: Spark handles placement, gang execution and tree-aggregated
-  gradient sync internally, and returns one model to the driver.
+  ``reg:*`` and ``binary:*`` objectives train with ``ml/gbt.py``, the
+  reference's architecture in Spark terms: one gang-scheduled barrier
+  job (core.py:242-253) whose tasks exchange per-level bin histograms
+  through a relay the driver hosts per fit, like the reference's Rabit
+  tracker (core.py:39-59). That is one Spark job per fit, where MLlib's
+  ``.fit()`` runs one per tree level plus three for metadata and split
+  finding. The trees, and the returned ``GBTClassificationModel`` /
+  ``GBTRegressionModel``, are MLlib's (see ``ml/gbt.py`` for the exact
+  semantics). ``multi:*`` still fits MLlib's ``OneVsRest(GBTClassifier)``.
+- The relay replaces ``BarrierTaskContext.allGather``: on Spark 4.1 every
+  allGather / ``barrier()`` call costs about 1 s (the driver polls the
+  barrier state once a second), which made a per-level exchange slower
+  than MLlib. A relay round costs milliseconds.
+- Memory: for the length of a fit the Python workers hold their rows'
+  binned features (one byte per feature value) with labels, weights and
+  running predictions; MLlib held its cached tree points in the JVM.
 - ``predict(model, df)`` mirrors ``dask_xgboost.predict``
   (core.py:340-384): lazy, per-partition, model broadcast by Spark
   (replacing closure serialization of the Booster, core.py:367).
 - ``XGBRegressor`` / ``XGBClassifier`` mirror the sklearn-style
   estimators (core.py:387-631) including param-name translation,
-  class discovery (core.py:561-566) and the binary→multiclass objective
-  switch (core.py:580-586; MLlib GBT is binary-only so multiclass goes
-  through OneVsRest).
+  class discovery (core.py:561-566, one Spark job with no shuffle) and
+  the binary→multiclass objective switch (core.py:580-586;
+  MLlib GBT is binary-only so multiclass goes through OneVsRest).
 
-Backend: MLlib GBT (same algorithm family). Where ``xgboost.spark`` is
-installed, ``SparkXGBClassifier``/``SparkXGBRegressor`` can be swapped
-in via ``backend='xgboost'`` — kept behind an import guard because this
-environment has no xgboost package.
+Where ``xgboost.spark`` is installed, ``SparkXGBClassifier``/
+``SparkXGBRegressor`` can be swapped in via ``backend='xgboost'`` — kept
+behind an import guard because xgboost is an optional dependency.
 """
 
 from __future__ import annotations
@@ -233,8 +243,10 @@ def train(
     """Blocking distributed GBT training (reference train, core.py:268-321).
 
     ``params['objective']`` picks the task exactly like xgboost params:
-    ``reg:*`` → GBTRegressor, ``binary:*`` → GBTClassifier,
-    ``multi:*`` → OneVsRest(GBTClassifier).
+    ``reg:*`` → a GBTRegressor's params, ``binary:*`` → a GBTClassifier's,
+    both trained in one barrier job by ``gbt.fit``; ``multi:*`` →
+    MLlib's OneVsRest(GBTClassifier). A binary fit raises ValueError
+    when a label is not 0/1.
 
     eval_df: validation frame (reference eval_set, core.py:138-151) —
     implemented with MLlib's validationIndicatorCol (union + indicator),
@@ -266,6 +278,8 @@ def train(
 
     from pyspark.ml.classification import GBTClassifier, OneVsRest
     from pyspark.ml.regression import GBTRegressor
+
+    from dask_xgboost_spark.ml import gbt
 
     params = dict(params)
     if eval_metric is None:
@@ -350,7 +364,10 @@ def train(
             est.setWeightCol(sample_weight_col)
     else:
         raise ValueError(f"unsupported objective: {objective}")
-    model = est.fit(fit_df)
+    if objective.startswith("multi"):
+        model = est.fit(fit_df)
+    else:
+        model = gbt.fit(est, fit_df)
     if impute_means is not None:
         # stamp the imputation contract on the model so predict()/
         # predict_proba() apply the SAME training-frame means
@@ -578,9 +595,10 @@ class XGBRegressor:
 class XGBClassifier:
     """sklearn-style facade (reference core.py:487-631).
 
-    Class discovery runs a distributed distinct (reference
-    core.py:561-566: da.unique + compute); n_classes > 2 switches the
-    objective binary:logistic → multi:softprob (core.py:580-586).
+    Class discovery runs ``distinct_labels`` (reference core.py:561-566:
+    da.unique + compute), one Spark job, skipped when ``classes`` is
+    given; n_classes > 2 switches the objective binary:logistic →
+    multi:softprob (core.py:580-586).
     """
 
     def __init__(
@@ -612,11 +630,9 @@ class XGBClassifier:
         sample_weight_eval_set: list[str] | None = None,
     ):
         if classes is None:
-            # eager distributed distinct, like the reference (core.py:566)
-            # bounded: |classes| rows
-            classes = sorted(
-                r[0] for r in df.select(label_col).distinct().collect()
-            )
+            # the reference's eager distributed unique (core.py:566), in
+            # one job with no shuffle
+            classes = distinct_labels(df, label_col)
         self.classes_ = classes
         params = dict(self.params)
         if len(classes) > 2 and params["objective"].startswith("binary"):
@@ -688,6 +704,22 @@ class XGBClassifier:
         MLlib ``featureImportances``; multiclass (OneVsRest) → mean of
         the per-class binary models' importances."""
         return _feature_importances(self.model_)
+
+
+def distinct_labels(df: DataFrame, label_col: str) -> list[float]:
+    """Sorted distinct non-null values of ``label_col`` in one Spark job
+    with no shuffle and no Python worker: each task's distinct labels
+    reach the driver as an observed ``collect_set`` metric of a write to
+    the no-op sink."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    labels = df.select(F.col(label_col).cast("double").alias("y"))
+    labels.observe(obs, F.collect_set("y").alias("labels")).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    # bounded: one value per distinct label
+    return sorted(obs.get["labels"])
 
 
 def _ovr_proba_frame(model, df: DataFrame) -> DataFrame:

@@ -538,3 +538,274 @@ def test_scipy_csr_local_predict():
 
     assert isinstance(v, SparseVector)
     assert v[2] == 3.0 and v.numNonzeros() == 1
+
+
+# ---------------------------------------------------------------------------
+# The barrier-job GBT trainer (ml/gbt.py) against MLlib's own fit
+
+
+def _tree_text(model):
+    """(structure, leaf values, tree weights) of a GBT model's debug
+    string: the structure keeps every split's feature and threshold
+    verbatim and blanks the leaf predictions, which are returned apart."""
+    import re
+
+    body = model.toDebugString.split("\n", 1)[1]  # line 0 carries the uid
+    leaves = [float(v) for v in re.findall(r"Predict: (\S+)", body)]
+    return re.sub(r"Predict: \S+", "Predict: _", body), leaves, list(model.treeWeights)
+
+
+def _assert_matches_mllib(est, df, eval_df=None):
+    import numpy as np
+
+    from dask_xgboost_spark.ml import gbt
+
+    want = est.fit(df)
+    got = gbt.fit(est, df)
+    assert type(got) is type(want)
+    w_struct, w_leaves, w_weights = _tree_text(want)
+    g_struct, g_leaves, g_weights = _tree_text(got)
+    assert g_struct == w_struct, "splits, features and thresholds must equal MLlib's"
+    assert g_weights == w_weights
+    np.testing.assert_allclose(g_leaves, w_leaves, rtol=1e-12, atol=0)
+    if eval_df is not None:
+        args = (eval_df,) if hasattr(want, "getThresholds") else (eval_df, "squared")
+        np.testing.assert_allclose(got.evaluateEachIteration(*args),
+                                   want.evaluateEachIteration(*args), rtol=1e-12, atol=0)
+    # same seed, same input: bit-identical
+    again = gbt.fit(est, df)
+    assert _tree_text(again) == (g_struct, g_leaves, g_weights)
+    return got
+
+
+def _sparse_emb(spark, emb):
+    from pyspark.ml.linalg import Vectors, VectorUDT
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    rows = [
+        (r["vec_id"], Vectors.sparse(len(r["embedding"]),
+                                     [(j, float(v)) for j, v in enumerate(r["embedding"])
+                                      if abs(v) > 0.5]), r["y"])
+        for r in emb.select("vec_id", "embedding", "y").collect()
+    ]
+    schema = StructType([StructField("vec_id", LongType()),
+                         StructField("features", VectorUDT()),
+                         StructField("y", DoubleType())])
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize("case", ["dense", "sparse", "weighted", "regression", "eval"])
+def test_gbt_trainer_matches_mllib(spark, emb, case):
+    # every fit grows MLlib's trees: same splits, features and thresholds,
+    # leaf values and per-iteration loss equal to rounding
+    from pyspark.ml.classification import GBTClassifier
+    from pyspark.ml.regression import GBTRegressor
+
+    common = dict(maxIter=4, maxDepth=3, stepSize=0.3, seed=11)
+    eval_df = None
+    df = emb
+    if case == "dense":
+        est = GBTClassifier(labelCol="y", **common)
+    elif case == "sparse":
+        df = _sparse_emb(spark, emb)
+        est = GBTClassifier(labelCol="y", **common)
+    elif case == "weighted":
+        df = emb.withColumn("w", (1 + F.col("vec_id") % 3 * 0.75).cast("double"))
+        est = GBTClassifier(labelCol="y", weightCol="w", **common)
+    elif case == "regression":
+        df = emb.withColumn("t", F.element_at("embedding", 1).cast("double"))
+        est = GBTRegressor(labelCol="t", **{**common, "maxDepth": 4})
+        eval_df = df
+    else:
+        df = emb.withColumn("val", F.col("vec_id") % 4 == 0)
+        eval_df = df.filter("val")
+        est = GBTClassifier(labelCol="y", validationIndicatorCol="val",
+                            **{**common, "maxIter": 30, "stepSize": 0.8})
+    model = _assert_matches_mllib(est, df, eval_df)
+    if case == "eval":
+        assert model.getNumTrees < 30, "the validation set must stop training early"
+
+
+def _listening_sockets() -> set[str]:
+    """Inodes of the TCP sockets this process has listening."""
+    import os
+
+    mine = set()
+    for fd in os.listdir("/proc/self/fd"):
+        try:
+            target = os.readlink(f"/proc/self/fd/{fd}")
+        except OSError:
+            continue
+        if target.startswith("socket:["):
+            mine.add(target[8:-1])
+    listening = set()
+    for table in ("/proc/net/tcp", "/proc/net/tcp6"):
+        if os.path.exists(table):
+            with open(table) as fh:
+                for line in fh.readlines()[1:]:
+                    cols = line.split()
+                    if cols[3] == "0A":  # TCP_LISTEN
+                        listening.add(cols[9])
+    return mine & listening
+
+
+def _relay_threads():
+    import threading
+
+    return [t for t in threading.enumerate() if t.name == "gbt-relay" and t.is_alive()]
+
+
+def test_gbt_bad_label_fails_fast_and_cleans_up(spark, emb):
+    # a label of 2 in one partition stops a binary fit with a clear error,
+    # within a bounded time, leaving no relay socket or thread behind
+    import time
+
+    first = emb.agg(F.min("vec_id")).first()[0]
+    bad = emb.withColumn("y2", F.when(F.col("vec_id") == first, 2.0).otherwise(F.col("y")))
+    before = _listening_sockets()
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="invalid label 2.0"):
+        train({"objective": "binary:logistic", **PARAMS}, bad, label_col="y2")
+    assert time.perf_counter() - t0 < 60
+    assert not _relay_threads()
+    assert _listening_sockets() <= before
+
+
+def test_relay_skips_stray_clients(monkeypatch):
+    # a client that connects and stays silent, one that connects and
+    # closes, and one with the wrong secret are dropped; the ranks behind
+    # them still meet
+    import socket
+    import threading
+
+    from dask_xgboost_spark.ml import barrier
+
+    monkeypatch.setattr(barrier, "HELLO_TIMEOUT_S", 0.2)
+    relay = barrier.Relay("127.0.0.1")
+
+    def coordinator(r):
+        total = sum(r.gather())
+        r.broadcast(total)
+        return total
+
+    relay.start(2, coordinator)
+    silent = socket.create_connection(relay.address)
+    socket.create_connection(relay.address).close()
+    wrong = barrier.RankLink(relay.address, "0" * 32, 0)
+    answers = {}
+
+    def rank(i):
+        link = barrier.RankLink(relay.address, relay.secret, i)
+        answers[i] = link.exchange(i + 1)
+        link.close()
+
+    threads = [threading.Thread(target=rank, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(30)
+    relay.wait()
+    silent.close()
+    wrong.close()
+    assert relay.error is None and relay.result == 3 and answers == {0: 3, 1: 3}
+
+
+def _range_frame(spark, rows: int, partitions: int, start: int = 0):
+    """Seeded features on a plain ``range`` (no exchange in the plan)."""
+    from pyspark.ml.functions import array_to_vector
+
+    df = spark.range(start, rows, 1, numPartitions=partitions)
+    feats = [F.round(F.rand(seed=j) * 10, 1) for j in range(5)]
+    df = df.withColumn("x", F.array(*feats))
+    return df.withColumn("features", array_to_vector("x")).withColumn(
+        "y", (F.element_at("x", 1) + F.element_at("x", 2) > 10).cast("double"))
+
+
+def test_gbt_more_partitions_than_slots_and_empty_partition(spark):
+    # inputs with more partitions than task slots are repartitioned to the
+    # slots; an empty partition is a rank with no rows
+    from pyspark.ml.classification import GBTClassifier
+
+    from dask_xgboost_spark.ml import gbt
+    from dask_xgboost_spark.ml.barrier import task_slots
+
+    est = GBTClassifier(labelCol="y", maxIter=3, maxDepth=3, seed=5)
+    many = _range_frame(spark, 2000, task_slots(spark) + 3)
+    model = gbt.fit(est, many)
+    assert model.getNumTrees == 3 and model.transform(many).count() == 2000
+
+    # ids 0-199 fill partition 0; the filter leaves it empty
+    holes = _range_frame(spark, 800, 4).filter(F.col("id") >= 200)
+    assert holes.rdd.glom().map(len).collect()[0] == 0
+    _assert_matches_mllib(est, holes)
+    assert not _relay_threads()
+
+
+def test_gbt_fits_union_and_coalesce(spark):
+    # Spark refuses a barrier stage over an RDD chain whose partition
+    # counts differ, as a union's or a coalesce's do; the trainer
+    # repartitions such inputs to the task slots
+    from pyspark.ml.classification import GBTClassifier
+
+    from dask_xgboost_spark.ml import gbt
+
+    from dask_xgboost_spark.ml.barrier import _own_partitions, task_slots
+
+    est = GBTClassifier(labelCol="y", maxIter=3, maxDepth=3, seed=5)
+    union = _range_frame(spark, 600, 2).union(_range_frame(spark, 1200, 3, start=600))
+    coalesced = _range_frame(spark, 1200, 4).coalesce(2)
+    slots = task_slots(spark)
+    assert _own_partitions(_range_frame(spark, 1200, 2), slots) == 2
+    assert _own_partitions(union, slots) is None
+    assert _own_partitions(coalesced, slots) is None
+    _assert_matches_mllib(est, union)
+    _assert_matches_mllib(est, coalesced)
+    clf = XGBClassifier(n_estimators=2, max_depth=3).fit(
+        _range_frame(spark, 600, 2).unionByName(_range_frame(spark, 1200, 3, start=600)),
+        label_col="y")
+    assert clf.classes_ == [0.0, 1.0]
+
+
+def test_binary_fit_runs_two_spark_jobs(spark, emb):
+    # job-count tripwire: class discovery is one job, and metadata, split
+    # finding and every tree level of a binary fit share one barrier job
+    # (MLlib's fit plus a distinct().collect() ran 11 for 2 trees of depth 3)
+    sc = spark.sparkContext
+    group = "binary-fit-job-count"
+    sc.setJobGroup(group, "XGBClassifier.fit")
+    try:
+        clf = XGBClassifier(n_estimators=2, max_depth=3, learning_rate=0.3).fit(emb, label_col="y")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert clf.classes_ == [0.0, 1.0]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+def test_gbt_subsampling_is_seeded(spark, emb):
+    # subsamplingRate draws each tree's rows per seed: the same seed grows
+    # the same trees, and sampling changes them
+    from pyspark.ml.classification import GBTClassifier
+
+    from dask_xgboost_spark.ml import gbt
+
+    common = dict(labelCol="y", maxIter=3, maxDepth=3, seed=3)
+    half = GBTClassifier(subsamplingRate=0.5, **common)
+    a, b = gbt.fit(half, emb), gbt.fit(half, emb)
+    assert _tree_text(a) == _tree_text(b)
+    assert _tree_text(a) != _tree_text(gbt.fit(GBTClassifier(**common), emb))
+
+
+def test_distinct_labels_one_job(spark, emb):
+    # class discovery: one job, no shuffle
+    from dask_xgboost_spark.ml.core import distinct_labels
+
+    sc = spark.sparkContext
+    group = "distinct-labels-job-count"
+    sc.setJobGroup(group, "distinct_labels")
+    try:
+        labels = distinct_labels(emb, "label")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert labels == [float(i) for i in range(10)]
+    (job,) = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(sc.statusTracker().getJobInfo(job).stageIds) == 1, "no shuffle"

@@ -1,6 +1,5 @@
-"""Scale-path strategy tests: bucketed joins eliminate the shuffle,
-salted joins preserve semantics, barrier training matches the
-single-node closed form."""
+"""Scale-path strategy tests: bucketed joins eliminate the shuffle and
+salted joins preserve semantics."""
 
 from __future__ import annotations
 
@@ -88,30 +87,6 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
             salted.orderBy("l_orderkey").toPandas()
         )
     )
-
-
-def test_barrier_train_matches_closed_form(spark):
-    from dask_xgboost_spark.ml.barrier import barrier_train_linear
-    from dask_xgboost_spark.sources.synthetic import make_random_features
-
-    df = make_random_features(spark, n_rows=2000, n_features=4, seed=7)
-    # linear target with known weights
-    w_true = [2.0, -1.0, 0.5, 3.0]
-    df = df.withColumn(
-        "y",
-        sum(
-            [F.element_at("features", i + 1) * w for i, w in enumerate(w_true)],
-            F.lit(0.25),  # intercept
-        ),
-    )
-    w = barrier_train_linear(df, feature_col="features", label_col="y", num_partitions=4)
-    # exact recovery (noiseless linear system)
-    np.testing.assert_allclose(w[:4], w_true, atol=1e-6)
-    np.testing.assert_allclose(w[4], 0.25, atol=1e-6)
-
-    # determinism across runs (reference "we can do this twice" pattern)
-    w2 = barrier_train_linear(df, feature_col="features", label_col="y", num_partitions=4)
-    np.testing.assert_allclose(w, w2, atol=0)
 
 
 def test_row_salt_stable_under_repartitioning(spark, sf_dir):
