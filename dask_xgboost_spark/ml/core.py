@@ -4,15 +4,18 @@ Re-expresses the reference's entire ML surface on Spark:
 
 - ``train(params, df, ...)`` mirrors ``dask_xgboost.train``
   (reference core.py:268-321): blocking call, returns a fitted model.
-  ``reg:*`` and ``binary:*`` objectives train with ``ml/gbt.py``, the
-  reference's architecture in Spark terms: one gang-scheduled barrier
-  job (core.py:242-253) whose tasks exchange per-level bin histograms
+  Every objective trains with ``ml/gbt.py``, the reference's
+  architecture in Spark terms: one gang-scheduled barrier job
+  (core.py:242-253) whose tasks exchange per-level bin histograms
   through a relay the driver hosts per fit, like the reference's Rabit
-  tracker (core.py:39-59). That is one Spark job per fit, where MLlib's
-  ``.fit()`` runs one per tree level plus three for metadata and split
-  finding. The trees, and the returned ``GBTClassificationModel`` /
-  ``GBTRegressionModel``, are MLlib's (see ``ml/gbt.py`` for the exact
-  semantics). ``multi:*`` still fits MLlib's ``OneVsRest(GBTClassifier)``.
+  tracker (core.py:39-59). ``reg:*`` and ``binary:*`` are one Spark job
+  per fit, where MLlib's ``.fit()`` runs one per tree level plus three
+  for metadata and split finding. ``multi:*`` is one such fit per class,
+  as MLlib's ``OneVsRest(GBTClassifier)`` would run them. The trees, and
+  the returned ``GBTClassificationModel`` / ``GBTRegressionModel`` /
+  ``OneVsRestModel``, are MLlib's (see ``ml/gbt.py`` for the exact
+  semantics). The eval history is the validation loss the trainer
+  computes for early stopping, so it costs no extra job.
 - The relay replaces ``BarrierTaskContext.allGather``: on Spark 4.1 every
   allGather / ``barrier()`` call costs about 1 s (the driver polls the
   barrier state once a second), which made a per-level exchange slower
@@ -26,12 +29,8 @@ Re-expresses the reference's entire ML surface on Spark:
 - ``XGBRegressor`` / ``XGBClassifier`` mirror the sklearn-style
   estimators (core.py:387-631) including param-name translation,
   class discovery (core.py:561-566, one Spark job with no shuffle) and
-  the binary→multiclass objective switch (core.py:580-586;
-  MLlib GBT is binary-only so multiclass goes through OneVsRest).
-
-Where ``xgboost.spark`` is installed, ``SparkXGBClassifier``/
-``SparkXGBRegressor`` can be swapped in via ``backend='xgboost'`` — kept
-behind an import guard because xgboost is an optional dependency.
+  the binary→multiclass objective switch (core.py:580-586; the trees
+  are binary, so multiclass is one-vs-rest).
 """
 
 from __future__ import annotations
@@ -40,13 +39,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # optional backend (not present in this environment)
-    from xgboost.spark import SparkXGBClassifier, SparkXGBRegressor  # noqa: F401
-
-    HAS_XGBOOST = True
-except Exception:  # pragma: no cover
-    HAS_XGBOOST = False
 
 FEATURES_COL = "features"
 
@@ -242,28 +234,39 @@ def train(
 ):
     """Blocking distributed GBT training (reference train, core.py:268-321).
 
-    ``params['objective']`` picks the task exactly like xgboost params:
-    ``reg:*`` → a GBTRegressor's params, ``binary:*`` → a GBTClassifier's,
-    both trained in one barrier job by ``gbt.fit``; ``multi:*`` →
-    MLlib's OneVsRest(GBTClassifier). A binary fit raises ValueError
-    when a label is not 0/1.
+    ``params['objective']`` picks the task exactly like xgboost params, and
+    every task trains with ``gbt.fit``, one barrier job per binary model:
+
+    - ``reg:*`` → a ``GBTRegressionModel``;
+    - ``binary:*`` → a ``GBTClassificationModel``; a label other than 0/1
+      raises ValueError;
+    - ``multi:*`` → a ``OneVsRestModel`` whose model k was fitted on the
+      indicator ``label == k``, for k below ``params['num_class']``, or
+      below max label + 1 (one aggregate job) when it is not given. These
+      are the models MLlib's ``OneVsRest(GBTClassifier)`` fits.
 
     eval_df: validation frame (reference eval_set, core.py:138-151) —
-    implemented with MLlib's validationIndicatorCol (union + indicator),
-    which also enables early stopping via validationTol.
+    its rows ride with the training rows under a validation indicator
+    (MLlib's validationIndicatorCol): they grow no tree and stop boosting
+    early (MLlib's validationTol). For ``multi:*`` each class stops on
+    its own.
 
-    evals_result: dict filled in place with per-iteration validation loss
-    (reference evals_result/history, core.py:120,259-260) via MLlib's
-    ``evaluateEachIteration``; keys follow the reference's
-    ``validation_0`` naming (core.py:148).
+    evals_result: dict filled in place with the validation loss after
+    each kept tree (reference evals_result/history, core.py:120,259-260),
+    under the reference's ``validation_0`` key (core.py:148). It is the
+    loss early stopping compares — LogLoss for classification, the
+    regressor's lossType (squared error by default) for regression — as
+    a weighted mean over the validation rows, so without eval weights it
+    equals the model's ``evaluateEachIteration(eval_df)``. A ``multi:*``
+    fit has one history per class and reports none.
 
     sample_weight_eval_set: weight-column names zipped against the eval
     frames (reference core.py:138-151; zip truncation semantics per
     test_core.py:166-170 — extra entries are ignored, an empty list means
     unweighted). This engine takes one eval frame, so the first entry
-    names the weight column in ``eval_df``; it weights both the
-    early-stopping validation signal (via weightCol on the union) and the
-    reported eval history.
+    names the weight column in ``eval_df``; it weights both early
+    stopping and the reported history. Without it validation rows weigh
+    1.0, whatever ``sample_weight_col`` says.
 
     eval_metric: a *callable* metric is accepted and dropped with a
     warning, exactly like the reference (core.py:454-458: custom
@@ -276,7 +279,7 @@ def train(
     """
     import warnings
 
-    from pyspark.ml.classification import GBTClassifier, OneVsRest
+    from pyspark.ml.classification import GBTClassifier
     from pyspark.ml.regression import GBTRegressor
 
     from dask_xgboost_spark.ml import gbt
@@ -300,11 +303,12 @@ def train(
         params.pop("missing", None)
 
     objective = params.get("objective", "reg:squarederror")
+    if not objective.startswith(("reg", "binary", "multi")):
+        raise ValueError(f"unsupported objective: {objective}")
     mlp = translate_params({**params, **kwargs})
     mlp.setdefault("seed", 42)
     common = dict(featuresCol=features_col, labelCol=label_col, **mlp)
-    if sample_weight_col is not None:
-        common["weightCol"] = sample_weight_col
+    weight_col = sample_weight_col
 
     impute_means: list[float] | None = None
     if missing is not None:
@@ -317,13 +321,6 @@ def train(
         if eval_df is not None:
             eval_df = apply_impute(eval_df, missing, impute_means, features_col)
 
-    # zip-truncate: first weight spec pairs with the single eval frame
-    eval_weight_col = (
-        sample_weight_eval_set[0]
-        if sample_weight_eval_set and eval_df is not None
-        else None
-    )
-
     fit_df = df
     if eval_df is not None:
         # Distributed eval sets are first-class here (the reference must
@@ -332,116 +329,68 @@ def train(
         # restriction).
         train_part = df.withColumn("_is_val", F.lit(False))
         val_part = eval_df.withColumn("_is_val", F.lit(True))
-        if eval_weight_col is not None:
-            # one weight column across the union: train rows keep their
-            # weights (or 1.0), val rows carry the eval-set weights
-            train_w = (
-                F.col(sample_weight_col) if sample_weight_col else F.lit(1.0)
-            )
-            train_part = train_part.withColumn("_w", train_w.cast("double"))
-            val_part = val_part.withColumn(
-                "_w", F.col(eval_weight_col).cast("double")
-            )
-            common["weightCol"] = "_w"
+        # zip-truncate: first weight spec pairs with the single eval frame
+        eval_weight_col = sample_weight_eval_set[0] if sample_weight_eval_set else None
+        if sample_weight_col or eval_weight_col:
+            # one weight column across the union: each side keeps its own
+            # weights, or 1.0 (reference core.py:138-151)
+            def weights(col):
+                return (F.col(col) if col else F.lit(1.0)).cast("double")
+
+            train_part = train_part.withColumn("_w", weights(sample_weight_col))
+            val_part = val_part.withColumn("_w", weights(eval_weight_col))
+            weight_col = "_w"
         fit_df = train_part.unionByName(val_part, allowMissingColumns=True)
         common["validationIndicatorCol"] = "_is_val"
+    if weight_col is not None:
+        common["weightCol"] = weight_col
 
+    history: list[float] = []
     if objective.startswith("reg"):
-        est = GBTRegressor(**common)
+        model = gbt.fit(GBTRegressor(**common), fit_df, history)
     elif objective.startswith("binary"):
-        est = GBTClassifier(**common)
-    elif objective.startswith("multi"):
-        base = GBTClassifier(
-            featuresCol=features_col, labelCol=label_col, **mlp
-        )
-        est = OneVsRest(
-            classifier=base,
-            featuresCol=features_col,
-            labelCol=label_col,
-            parallelism=4,
-        )
-        if sample_weight_col is not None:
-            est.setWeightCol(sample_weight_col)
+        model = gbt.fit(GBTClassifier(**common), fit_df, history)
     else:
-        raise ValueError(f"unsupported objective: {objective}")
-    if objective.startswith("multi"):
-        model = est.fit(fit_df)
-    else:
-        model = gbt.fit(est, fit_df)
+        num_class = params.get("num_class")
+        if num_class is None:
+            # OneVsRest's class count: max label + 1
+            num_class = int(df.agg(F.max(label_col)).first()[0]) + 1
+        model = _fit_one_vs_rest(GBTClassifier(**common), fit_df, num_class)
     if impute_means is not None:
         # stamp the imputation contract on the model so predict()/
         # predict_proba() apply the SAME training-frame means
         model._impute_missing = missing
         model._impute_means = impute_means
-    if evals_result is not None and eval_df is not None:
-        if eval_weight_col is not None and hasattr(model, "trees"):
-            evals_result["validation_0"] = {
-                "loss": _weighted_eval_history(
-                    model,
-                    eval_df,
-                    weight_col=eval_weight_col,
-                    label_col=label_col,
-                    features_col=features_col,
-                    is_classifier=not objective.startswith("reg"),
-                )
-            }
-        elif hasattr(model, "evaluateEachIteration"):
-            try:
-                history = list(model.evaluateEachIteration(eval_df))
-            except TypeError:  # the regression variant requires a loss name
-                history = list(model.evaluateEachIteration(eval_df, "squared"))
-            evals_result["validation_0"] = {"loss": history}
+    if evals_result is not None and history:
+        evals_result["validation_0"] = {"loss": history}
     return model
 
 
-def _weighted_eval_history(
-    model,
-    eval_df: DataFrame,
-    weight_col: str,
-    label_col: str,
-    features_col: str,
-    is_classifier: bool,
-) -> list[float]:
-    """Per-iteration WEIGHTED validation loss (reference plumbs
-    sample_weight_eval_set into the eval DMatrix so the reported metric is
-    weighted, core.py:138-151). MLlib's ``evaluateEachIteration`` is
-    unweighted, so the cumulative GBT score is rebuilt tree by tree:
-    score_k = Σ_{i≤k} treeWeight_i · tree_i(x) — one distributed transform
-    per boosting round (bounded by maxIter), no driver-side row loops.
-    Each round's accumulated frame is ``localCheckpoint``-ed so round k
-    evaluates ONLY tree k over materialized scores (O(k) total tree
-    evaluations, not O(k²) re-execution of the transform chain), and the
-    lineage stays flat. Loss: weighted RMSE (regression) / weighted error
-    rate (binary margin > 0, classification) — note this is a DIFFERENT
-    metric than the unweighted ``evaluateEachIteration`` path (logLoss /
-    variance), so weighted and unweighted histories are not directly
-    comparable.
-    """
-    import math
+def _fit_one_vs_rest(base, df: DataFrame, num_class: int):
+    """MLlib's ``OneVsRest(classifier=base)`` fit with ``gbt.fit`` as the
+    learner: model k fits the indicator ``label == k`` with the base's
+    weight and validation columns. The k barrier jobs run one after
+    another, since concurrent barrier jobs would each wait for every task
+    slot."""
+    from pyspark.ml.classification import OneVsRest, OneVsRestModel
 
-    cur = eval_df.withColumn("_acc", F.lit(0.0))
-    if features_col != FEATURES_COL:
-        cur = cur.withColumnRenamed(features_col, FEATURES_COL)
-    w = F.col(weight_col).cast("double")
-    y = F.col(label_col).cast("double")
-    losses: list[float] = []
-    for tree, tw in zip(model.trees, model.treeWeights):
-        cur = (
-            tree.transform(cur)
-            .withColumn("_acc", F.col("_acc") + F.lit(float(tw)) * F.col("prediction"))
-            .drop("prediction")
-            .localCheckpoint()
+    from dask_xgboost_spark.ml import gbt
+
+    label = F.col(base.getLabelCol())
+    models = [
+        gbt.fit(
+            base.copy({base.labelCol: "_ovr_y"}),
+            df.withColumn("_ovr_y", F.when(label == float(k), 1.0).otherwise(0.0)),
         )
-        if is_classifier:
-            wrong = F.when((F.col("_acc") > 0).cast("double") != y, w).otherwise(F.lit(0.0))
-            num, den = F.sum(wrong), F.sum(w)
-            row = cur.select((num / den).alias("loss")).first()
-            losses.append(float(row["loss"]))
-        else:
-            se = w * (F.col("_acc") - y) * (F.col("_acc") - y)
-            row = cur.select((F.sum(se) / F.sum(w)).alias("mse")).first()
-            losses.append(math.sqrt(float(row["mse"])))
-    return losses
+        for k in range(num_class)
+    ]
+    ovr = OneVsRest(
+        classifier=base, featuresCol=base.getFeaturesCol(), labelCol=base.getLabelCol()
+    )
+    if base.isDefined(base.weightCol):
+        ovr.setWeightCol(base.getWeightCol())
+    # the copied ``classifier`` param is what the model's writer saves
+    return ovr._copyValues(OneVsRestModel(models))
 
 
 def _local_features_frame(data):
@@ -637,7 +586,9 @@ class XGBClassifier:
         params = dict(self.params)
         if len(classes) > 2 and params["objective"].startswith("binary"):
             params["objective"] = "multi:softprob"
-            params["num_class"] = len(classes)
+            # OneVsRest's class count, max label + 1: len(classes) for the
+            # reference's labels 0 .. n-1
+            params["num_class"] = int(max(classes)) + 1
         # mirrors the reference stamping the resolved objective/num_class
         # on the trained model (core.py:262-264, 580-586)
         self.objective_ = params["objective"]
@@ -749,10 +700,11 @@ def _stamp_best_attrs(est, eval_df) -> None:
     """Mirror the reference's early-stopping attributes (core.py:477-479:
     ``best_score`` / ``best_iteration`` / ``best_ntree_limit`` stamped on
     the estimator after fitting with an eval set). Here the eval history
-    comes from ``evals_result_`` (validationIndicatorCol implies MLlib's
-    validationTol early stopping), ``best_iteration`` is the argmin of
-    the per-iteration validation loss, and ``best_ntree_limit`` follows
-    xgboost's convention of best_iteration + 1."""
+    comes from ``evals_result_``, ``best_iteration`` is the argmin of the
+    per-iteration validation loss, and ``best_ntree_limit`` follows
+    xgboost's convention of best_iteration + 1. Early stopping keeps the
+    trees up to the best loss and the history covers exactly those, so
+    ``best_ntree_limit`` is the model's tree count."""
     if eval_df is None:
         return
     history = est.evals_result_.get("validation_0", {}).get("loss", [])

@@ -44,6 +44,8 @@ reaches the ranks in another row order, which changes only rounding.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 # org.apache.spark.ml.impl.Utils.EPSILON
@@ -56,9 +58,17 @@ _INVALID_GAIN = -1.7976931348623157e308
 # losses (org.apache.spark.mllib.tree.loss)
 
 
+def _exp(x: np.ndarray) -> np.ndarray:
+    """``math.exp`` per element: the C library's exp agrees with the JVM's
+    ``Math.exp`` far more often than numpy's vectorised exp, which is off
+    by an ulp for about a quarter of inputs; an ulp in a gradient can flip
+    a near-tied split against MLlib's."""
+    return np.fromiter(map(math.exp, x.tolist()), np.float64, len(x))
+
+
 def _neg_gradient(loss: str, pred: np.ndarray, y: np.ndarray) -> np.ndarray:
     if loss == "logistic":
-        return -(-4.0 * y / (1.0 + np.exp(2.0 * y * pred)))
+        return -(-4.0 * y / (1.0 + _exp(2.0 * y * pred)))
     if loss == "squared":
         return -(-2.0 * (y - pred))
     return np.where(y - pred < 0, -1.0, 1.0)
@@ -329,7 +339,7 @@ class _Coordinator:
         self.min_weight = cfg["min_weight_fraction"] * weight
         relay.broadcast((thresholds, int(self.num_splits.max(initial=0)) + 1))
 
-        trees, best_error, best_m = [], None, 1
+        trees, errors, best_error, best_m = [], [], None, 1
         for m in range(cfg["max_iter"]):
             trees.append(self._grow(relay))
             if not cfg["validate"]:
@@ -339,6 +349,7 @@ class _Coordinator:
                 err_sum, w_sum = err_sum + e, w_sum + w
             with np.errstate(invalid="ignore", divide="ignore"):
                 error = err_sum / w_sum
+            errors.append(float(error))
             done = m == cfg["max_iter"] - 1
             if m == 0:
                 best_error = error
@@ -349,6 +360,7 @@ class _Coordinator:
             relay.broadcast(done)
             if done:
                 break
+        self.history = errors[:best_m]
         return trees[:best_m] if cfg["validate"] else trees
 
     def _grow(self, relay) -> dict[int, _Node]:
@@ -515,10 +527,15 @@ def _config(est) -> dict:
     }
 
 
-def fit(est, df):
+def fit(est, df, history: list | None = None):
     """Train ``est`` (a ``GBTClassifier`` or ``GBTRegressor``) on ``df``
     in one barrier job; returns the model MLlib's ``est.fit(df)`` would.
-    Raises ``ValueError`` for classification labels outside {0, 1}."""
+    Raises ``ValueError`` for classification labels outside {0, 1}.
+
+    With a validation indicator, ``history`` (a list, extended in place)
+    receives the validation loss after each kept tree: the weighted mean
+    of the estimator's loss that early stopping compares, which is what
+    the model's ``evaluateEachIteration`` on the validation rows reports."""
     from pyspark.ml.classification import GBTClassificationModel
     from pyspark.ml.linalg import VectorUDT
     from pyspark.ml.regression import GBTRegressionModel
@@ -546,6 +563,8 @@ def fit(est, df):
         _rank(batches, link, {**cfg, "rank": BarrierTaskContext.get().partitionId()})
 
     trees = run_barrier(frame, rank_fn, coordinator)
+    if history is not None:
+        history.extend(coordinator.history)
     sc = df.sparkSession.sparkContext
     pruned = [_pruned(nodes, 1, coordinator.thresholds) for nodes in trees]
     jtrees = _java_trees(sc, pruned, coordinator.num_features)

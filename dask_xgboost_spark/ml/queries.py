@@ -62,7 +62,8 @@ def m_train_02(spark, sf):
 @register("M-TRAIN-03", sql=None, mode="golden")
 def m_train_03(spark, sf):
     """Multi-class classification via the objective switch
-    (core.py:580-586): 10-class OneVsRest(GBT) fit+predict."""
+    (core.py:580-586): 10-class one-vs-rest GBT fit+predict, one barrier
+    fit per class."""
     emb = load(spark, sf, "embeddings")
     df = assemble_features(emb).withColumn("y", F.col("label").cast("double"))
     clf = XGBClassifier(n_estimators=3, max_depth=2, learning_rate=0.5).fit(
@@ -105,8 +106,9 @@ def m_train_05(spark, sf):
 @register("M-TRAIN-06", sql=None, mode="golden")
 def m_train_06(spark, sf):
     """Early stopping (reference early_stopping_rounds/best attrs,
-    core.py:476-479,611-614 → MLlib validationTol): with a loose tolerance
-    the booster stops before maxIter; returns trees-built vs requested."""
+    core.py:476-479,611-614 → MLlib validationTol): with MLlib's default
+    tolerance (0.01) the booster may stop before maxIter; returns
+    trees-built vs requested."""
     df = _binary_frame(spark, sf)
     tr = df.filter(F.col("vec_id") % 5 != 0)
     va = df.filter(F.col("vec_id") % 5 == 0)
@@ -115,7 +117,7 @@ def m_train_06(spark, sf):
     requested = 30
     model = train(
         {"objective": "binary:logistic", "n_estimators": requested, "max_depth": 2,
-         "learning_rate": 0.3, "validationTol": 0.05},
+         "learning_rate": 0.3},
         tr,
         label_col="y",
         eval_df=va,

@@ -139,8 +139,10 @@ def test_evals_result_history(spark, emb):
     # test_core.py:508-533): per-iteration validation loss is recorded
     tr = emb.filter(F.col("vec_id") % 5 != 0)
     va = emb.filter(F.col("vec_id") % 5 == 0)
+    import numpy as np
+
     history: dict = {}
-    train(
+    model = train(
         {"objective": "binary:logistic", **PARAMS},
         tr,
         label_col="y",
@@ -153,6 +155,10 @@ def test_evals_result_history(spark, emb):
     # matching the reference where best_ntree_limit ≤ num_boost_round
     assert 1 <= len(losses) <= PARAMS["n_estimators"]
     assert all(isinstance(v, float) for v in losses)
+    # it is the trainer's own validation loss, one value per kept tree,
+    # and what MLlib reports for the same model and rows
+    assert len(losses) == model.getNumTrees
+    np.testing.assert_allclose(losses, model.evaluateEachIteration(va), rtol=1e-12, atol=0)
 
 
 def test_input_type_matrix(spark, sf_dir):
@@ -427,6 +433,7 @@ def test_best_attrs_after_eval_fit(spark, emb):
     assert clf.best_score == min(hist)
     assert hist[clf.best_iteration] == clf.best_score
     assert clf.best_ntree_limit == clf.best_iteration + 1
+    assert clf.best_ntree_limit == clf.model_.getNumTrees
     # and a fit WITHOUT an eval set must not invent the attributes
     clf2 = XGBClassifier(**PARAMS).fit(tr, label_col="y")
     assert clf2.evals_result_ == {}
@@ -552,7 +559,8 @@ def _tree_text(model):
 
     body = model.toDebugString.split("\n", 1)[1]  # line 0 carries the uid
     leaves = [float(v) for v in re.findall(r"Predict: (\S+)", body)]
-    return re.sub(r"Predict: \S+", "Predict: _", body), leaves, list(model.treeWeights)
+    weights = list(getattr(model, "treeWeights", []))  # a single tree has none
+    return re.sub(r"Predict: \S+", "Predict: _", body), leaves, weights
 
 
 def _assert_matches_mllib(est, df, eval_df=None):
@@ -766,19 +774,43 @@ def test_gbt_fits_union_and_coalesce(spark):
     assert clf.classes_ == [0.0, 1.0]
 
 
+def _spark_jobs(spark, group: str, fn):
+    """(fn(), the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_binary_fit_runs_two_spark_jobs(spark, emb):
     # job-count tripwire: class discovery is one job, and metadata, split
     # finding and every tree level of a binary fit share one barrier job
     # (MLlib's fit plus a distinct().collect() ran 11 for 2 trees of depth 3)
-    sc = spark.sparkContext
-    group = "binary-fit-job-count"
-    sc.setJobGroup(group, "XGBClassifier.fit")
-    try:
-        clf = XGBClassifier(n_estimators=2, max_depth=3, learning_rate=0.3).fit(emb, label_col="y")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    clf, jobs = _spark_jobs(spark, "binary-fit-job-count", lambda: XGBClassifier(
+        n_estimators=2, max_depth=3, learning_rate=0.3).fit(emb, label_col="y"))
     assert clf.classes_ == [0.0, 1.0]
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert jobs == 2
+    # an eval set, weighted or not, adds no job for its history: that is
+    # the trainer's own validation loss. The train/eval union is
+    # repartitioned to the task slots first (a barrier stage refuses a
+    # union's RDD chain), and adaptive execution runs that shuffle as a
+    # job of its own: 2 jobs
+    tr = emb.filter(F.col("vec_id") % 5 != 0)
+    va = emb.filter(F.col("vec_id") % 5 == 0).withColumn("vw", (1 + F.col("vec_id") % 3).cast("double"))
+    for weights in ([], ["vw"]):
+        history: dict = {}
+        _, jobs = _spark_jobs(spark, f"eval-fit-job-count-{len(weights)}", lambda: train(
+            {"objective": "binary:logistic", **PARAMS}, tr, label_col="y", eval_df=va,
+            evals_result=history, sample_weight_eval_set=weights))
+        assert history["validation_0"]["loss"] and jobs == 2
+    # multiclass: class discovery, then one barrier job per class
+    ym = emb.withColumn("ym", F.col("label").cast("double"))
+    clf, jobs = _spark_jobs(spark, "multiclass-fit-job-count", lambda: XGBClassifier(
+        n_estimators=2, max_depth=3, learning_rate=0.3).fit(ym, label_col="ym"))
+    assert clf.n_classes_ == 10 and jobs == 11
 
 
 def test_gbt_subsampling_is_seeded(spark, emb):
@@ -809,3 +841,86 @@ def test_distinct_labels_one_job(spark, emb):
     assert labels == [float(i) for i in range(10)]
     (job,) = sc.statusTracker().getJobIdsForGroup(group)
     assert len(sc.statusTracker().getJobInfo(job).stageIds) == 1, "no shuffle"
+
+
+
+def _assert_prefix_of(got, want):
+    """``got``'s trees are ``want``'s first trees: same splits, features,
+    thresholds and tree weights, leaves within 1e-12."""
+    import numpy as np
+
+    n = got.getNumTrees
+    assert 1 <= n <= want.getNumTrees
+    assert list(got.treeWeights) == list(want.treeWeights)[:n]
+    for g, w in zip(got.trees, want.trees[:n]):
+        g_struct, g_leaves, _ = _tree_text(g)
+        w_struct, w_leaves, _ = _tree_text(w)
+        assert g_struct == w_struct
+        np.testing.assert_allclose(g_leaves, w_leaves, rtol=1e-12, atol=0)
+
+
+def test_multiclass_matches_one_vs_rest_and_round_trips(spark, emb, tmp_path):
+    # multiclass is one barrier fit per class on the indicator label == k:
+    # class by class the trees of MLlib's OneVsRest(GBTClassifier), the
+    # reference implementation; same seed, bit-identical; the
+    # OneVsRestModel saves and loads
+    import numpy as np
+    from pyspark.ml.classification import GBTClassifier, OneVsRest, OneVsRestModel
+
+    df = emb.withColumn("ym", F.col("label").cast("double"))
+    params = {"objective": "multi:softprob", "n_estimators": 3, "max_depth": 3,
+              "learning_rate": 0.5, "random_state": 7}
+    got = train(params, df, label_col="ym")
+    want = OneVsRest(classifier=GBTClassifier(maxIter=3, maxDepth=3, stepSize=0.5, seed=7),
+                     labelCol="ym").fit(df)
+    assert len(got.models) == len(want.models) == 10
+    for g, w in zip(got.models, want.models):
+        assert g.getNumTrees == w.getNumTrees
+        _assert_prefix_of(g, w)
+    again = train(params, df, label_col="ym")
+    assert [_tree_text(m) for m in again.models] == [_tree_text(m) for m in got.models]
+
+    path = str(tmp_path / "ovr_model")
+    got.write().overwrite().save(path)
+    loaded = OneVsRestModel.load(path)
+
+    def scores(model):
+        out = predict(model, df).select("vec_id", "prediction", "rawPrediction")
+        pdf = out.toPandas().sort_values("vec_id")
+        return pdf["prediction"].to_numpy(), np.array([v.toArray() for v in pdf["rawPrediction"]])
+
+    (p0, r0), (p1, r1) = scores(got), scores(loaded)
+    assert np.array_equal(p0, p1) and np.array_equal(r0, r1)
+
+
+def test_multiclass_eval_set_only_stops_early(spark, emb):
+    # validation rows grow no tree: with true or scrambled eval labels,
+    # every class's model is a prefix of the one fitted without them
+    df = emb.withColumn("ym", F.col("label").cast("double"))
+    tr = df.filter(F.col("vec_id") % 5 != 0)
+    va = df.filter(F.col("vec_id") % 5 == 0)
+    scrambled = va.withColumn("ym", ((F.col("ym") + F.col("vec_id")) % 10).cast("double"))
+    params = {"objective": "multi:softprob", "num_class": 10, "n_estimators": 6,
+              "max_depth": 2, "learning_rate": 0.5}
+    plain = train(params, tr, label_col="ym")
+    for eval_df in (va, scrambled):
+        model = train(params, tr, label_col="ym", eval_df=eval_df)
+        assert len(model.models) == 10
+        for got, want in zip(model.models, plain.models):
+            _assert_prefix_of(got, want)
+
+
+def test_eval_rows_weigh_one_without_eval_weights(spark, emb):
+    # reference core.py:138-151: an eval set is unweighted unless
+    # sample_weight_eval_set names its weight column, whatever the
+    # training weight column is called
+    tr = emb.filter(F.col("vec_id") % 5 != 0).withColumn(
+        "w", (1 + F.col("vec_id") % 2 * 3).cast("double"))
+    va = emb.filter(F.col("vec_id") % 5 == 0)
+    a = XGBClassifier(**PARAMS).fit(tr, label_col="y", sample_weight_col="w", eval_df=va)
+    b = XGBClassifier(**PARAMS).fit(
+        tr, label_col="y", sample_weight_col="w",
+        eval_df=va.withColumn("w", (1 + F.col("vec_id") % 3 * 9).cast("double")))
+    assert a.evals_result_["validation_0"]["loss"]
+    assert a.evals_result_ == b.evals_result_
+    assert _tree_text(a.model_) == _tree_text(b.model_)
