@@ -164,21 +164,23 @@ def compute_impute_means(
 ) -> list[float]:
     """Per-dimension means of the non-sentinel values — ONE distributed
     aggregate (posexplode → groupBy(pos)); only the dim-sized mean table
-    is collected. Computed on the TRAINING frame and reused everywhere
-    (eval frames, predict) so there is no train/serve skew."""
+    is collected. Every dimension keeps its row, so the dimension is its
+    largest ``pos`` + 1, and one whose values are all sentinel averages
+    nothing and gets 0.0. An empty frame gives ``[]``. Computed on the
+    TRAINING frame and reused everywhere (eval frames, predict) so there
+    is no train/serve skew."""
     from pyspark.ml.functions import vector_to_array
 
-    arr = vector_to_array(F.col(features_col))
+    v = F.col("v")
     means_rows = (
-        df.select(F.posexplode(arr).alias("pos", "v"))
-        .filter(F.col("v") != missing)
+        df.select(F.posexplode(vector_to_array(F.col(features_col))).alias("pos", "v"))
         .groupBy("pos")
-        .agg(F.avg("v").alias("m"))
+        .agg(F.avg(F.when(v != missing, v)).alias("m"))
         .collect()  # bounded: one row per feature dimension
     )
     means = {r["pos"]: r["m"] for r in means_rows}
-    dim = int(df.select(F.size(arr).alias("d")).first()["d"])
-    return [float(means.get(i, 0.0)) for i in range(dim)]
+    dim = max(means, default=-1) + 1
+    return [0.0 if means.get(i) is None else float(means[i]) for i in range(dim)]
 
 
 def apply_impute(

@@ -760,7 +760,7 @@ def m_prep_09(spark, sf):
     pre-salt the rank (windows.py::salted_top_k's two-stage shape) or
     fall back to the map-only hashed split (M-PREP-07), whose fold
     sizes are binomial-approximate rather than exact. The salting
-    claim is MEASURED, not asserted (r14 A/B, tools/ab_mprep09.py,
+    claim is MEASURED, not asserted (r14 A/B, tools/ab_mprep09.py @ 801c9f9,
     BASELINE.md §5): an UNFILTERED full rank gets no WindowGroupLimit
     pushdown (plan-verified — the protection that refuted Q-WIN-14's
     salting exists only for rank FILTERS), and on 10M-row fresh-JVM

@@ -61,7 +61,7 @@ def q_tpch_02(spark, sf):
     (s_name, p_partkey) so the LIMIT is a deterministic top-k
     (TakeOrderedAndProject).
 
-    r15 (tools/ab_tpch02.py, guide §2.3/§5): the r14 form referenced
+    r15 (tools/ab_tpch02.py @ 801c9f9, guide §2.3/§5): the r14 form referenced
     the pruned offer list twice — once under the per-part MIN, once as
     the equality probe — and Catalyst's exchange reuse does not fire
     across the differently-pruned branches, so LINEITEM was scanned
@@ -185,7 +185,7 @@ def q_tpch_03(spark, sf):
 def q_tpch_04(spark, sf):
     """Order-priority-checking shape (TPC-H Q4). The declared semantics
     stay the oracle's correlated EXISTS; the physical plan avoids it
-    (r14 A/B, tools/ab_tpch04.py — Catalyst's decorrelated semi join
+    (r14 A/B, tools/ab_tpch04.py @ 801c9f9 — Catalyst's decorrelated semi join
     builds a hash relation over the LINEITEM side, i.e. a fact-sized
     broadcast whose build cost grows linearly and dominated the wall:
     0.74 s at sf0.1 and 2.95 s at 10× vs 0.33/0.43 s for the shape
@@ -199,7 +199,7 @@ def q_tpch_04(spark, sf):
     lineitem rows drop from the inner join = EXISTS false; outputs
     proven identical at 1×/10×).
 
-    r15 (tools/ab_tpch04_r15.py): ONE body now — join the 6-month
+    r15 (tools/ab_tpch04_r15.py @ 801c9f9): ONE body now — join the 6-month
     orders slice to lineitem, filter, COUNT(DISTINCT o_orderkey) per
     priority — and the footer gate toggles ONLY the broadcast hint
     (the r14 two-branch split, max-agg fallback vs gated count-
@@ -596,7 +596,7 @@ def q_tpch_10(spark, sf):
     """Returned-item-reporting shape (TPC-H Q10): 4-way join on returns →
     per-customer lost revenue → top-20.
 
-    r15 (tools/ab_tpch10.py): the r1–r15 plan joined customer⋈orders
+    r15 (tools/ab_tpch10.py @ 801c9f9): the r1–r15 plan joined customer⋈orders
     first and aggregated AFTER the lineitem join, so under any admitting
     threshold the R-filtered LINEITEM itself became the broadcast build
     side — a fact-sized HashedRelation rebuilt every execution (the Q4
@@ -756,7 +756,7 @@ def q_tpch_05(spark, sf):
     against both nation-keyed inputs — customers are pruned (and pick
     up n_name) and suppliers are semi-joined down before any fact join.
 
-    r15 (tools/ab_tpch05.py): the r5–r14 declared order made CUSTOMER
+    r15 (tools/ab_tpch05.py @ 801c9f9): the r5–r14 declared order made CUSTOMER
     the streaming side (cust_a ⋈ orders ⋈ lineitem ⋈ supp_a), so under
     any threshold that admits it Catalyst broadcast the FULL LINEITEM —
     a fact-sized HashedRelation rebuilt every execution (the Q4
@@ -846,7 +846,7 @@ def q_tpch_13(spark, sf):
     a join-condition filter rather than a WHERE so the zeros survive)
     re-aggregated into a histogram of counts.
 
-    r15 (tools/ab_tpch13.py): the r1–r14 plan joined customer to RAW
+    r15 (tools/ab_tpch13.py @ 801c9f9): the r1–r14 plan joined customer to RAW
     orders rows and counted after the join — under any threshold that
     admits it the LeftOuter build side is ORDERS, a fact-sized
     HashedRelation rebuilt every execution (the Q4 disease); above the

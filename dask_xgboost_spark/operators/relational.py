@@ -288,7 +288,7 @@ _REVENUE_BY_NATION_SQL = (
 
 
 def _revenue_by_nation(spark, sf, hint_broadcast: bool):
-    """r15 dims-first body (the Q5/Q8 discipline, tools/ab_join02.py):
+    """r15 dims-first body (the Q5/Q8 discipline, tools/ab_join02.py @ 801c9f9):
     the r1–r14 fact-first order (li ⋈ orders ⋈ customer ⋈ nation) made
     the order-grain ORDERS scan a broadcast build at bench SFs (linear
     growth) and, above any admitting threshold, re-shuffled the

@@ -327,7 +327,7 @@ def q_tpch_16(spark, sf):
     broadcast anti join (null-aware); COUNT(DISTINCT) expands to a
     two-stage partial/final aggregate.
 
-    r15 (tools/ab_tpch16.py): the trailing ORDER BY grain is the part
+    r15 (tools/ab_tpch16.py @ 801c9f9): the trailing ORDER BY grain is the part
     ATTRIBUTE DOMAIN — |brands| × |types| × |sizes|, generator-fixed
     vocabularies (25 × 6 × 50 at every fixture SF; 25 × 150 × 50 in
     full TPC-H), invariant in fact volume — so the presentation sort is

@@ -70,7 +70,7 @@ def bounded_sort(df: DataFrame, *cols: Column | str) -> DataFrame:
     the input), the scale-correct plan at sf0.1 and at 100 TB is one
     NARROW ``coalesce(1)`` + in-partition sort: identical rows,
     identical presentation order, one fewer shuffle, no sampling pass.
-    Measured (tools/ab_sort_tail.py, sf0.1, fresh session, median of
+    Measured (tools/ab_sort_tail.py @ 801c9f9, sf0.1, fresh session, median of
     5 full re-executions): Q1-shape 0.459 → 0.247 s (−46%), hourly
     rollup 0.232 → 0.161 s (−31%), outputs pandas-identical.
 
@@ -93,7 +93,7 @@ def bounded_sort(df: DataFrame, *cols: Column | str) -> DataFrame:
     COALESCED SEGMENT, not the whole query: q_tpch_16's distinct-pair
     machinery scales with suppliers, but it runs below the final count
     exchange and stays parallel — its domain-bounded output grain
-    qualifies (r15, tools/ab_tpch16.py). The plan pin
+    qualifies (r15, tools/ab_tpch16.py @ 801c9f9). The plan pin
     (tests/test_plans.py::test_bounded_sorts_have_no_range_exchange)
     enforces the coalesced-stage shape mechanically.
     """

@@ -79,6 +79,19 @@ def test_replace_missing_all_sentinel_dimension(spark):
     assert sorted(r["f1"] for r in rows) == [2.0, 4.0]
 
 
+def test_train_empty_frame_with_missing_raises_trainer_error(spark):
+    # the imputation means of no rows are [], so an empty frame reaches the
+    # trainer's own row check whether or not a sentinel is given
+    from dask_xgboost_spark.ml.core import assemble_features, train
+
+    empty = assemble_features(
+        spark.createDataFrame([], "label double, e array<double>"), feature_col="e"
+    )
+    for missing in (None, -999.0):
+        with pytest.raises(ValueError, match="at least one training row"):
+            train({"objective": "binary:logistic"}, empty, missing=missing)
+
+
 def test_read_snapshot_missing_manifest_raises(spark, tmp_path):
     from dask_xgboost_spark.operators.merge import read_snapshot
 

@@ -806,6 +806,12 @@ def test_binary_fit_runs_two_spark_jobs(spark, emb):
             {"objective": "binary:logistic", **PARAMS}, tr, label_col="y", eval_df=va,
             evals_result=history, sample_weight_eval_set=weights))
         assert history["validation_0"]["loss"] and jobs == 2
+    # a missing sentinel adds the imputation means: one aggregate, whose
+    # shuffle adaptive execution runs as a job of its own (2 jobs), then
+    # the barrier job
+    _, jobs = _spark_jobs(spark, "missing-fit-job-count", lambda: train(
+        {"objective": "binary:logistic", **PARAMS}, emb, label_col="y", missing=-999.0))
+    assert jobs == 3
     # multiclass: class discovery, then one barrier job per class
     ym = emb.withColumn("ym", F.col("label").cast("double"))
     clf, jobs = _spark_jobs(spark, "multiclass-fit-job-count", lambda: XGBClassifier(

@@ -961,7 +961,7 @@ _BOUNDED_SORT_QUERIES = [
     # DOMAIN (brands × types × sizes — generator-fixed vocabularies,
     # invariant in fact volume); the distinct-pair volume the r14
     # screen worried about flows through the exchanges BELOW the
-    # coalesce point and stays parallel (tools/ab_tpch16.py: 1.56×/1.51×
+    # coalesce point and stays parallel (tools/ab_tpch16.py @ 801c9f9: 1.56×/1.51×
     # at 1×/10×, outputs identical)
     "Q-TPCH-16",
     # r15 continuation batch (tools/bounded_sort_rescreen.py — the
@@ -1126,7 +1126,7 @@ def test_tpch07_customer_side_broadcast_gated(spark, sf_dir):
 
 
 def test_tpch04_one_body_gate_toggles_hint_only(spark, sf_dir):
-    """r15 Q4 shape (tools/ab_tpch04_r15.py): ONE body — 6-month orders
+    """r15 Q4 shape (tools/ab_tpch04_r15.py @ 801c9f9): ONE body — 6-month orders
     slice joined to the shipdate-bounded lineitem, COUNT(DISTINCT
     o_orderkey) per priority — where the footer gate toggles only the
     broadcast HINT (the r14 two-branch split is gone, and with it the
@@ -1186,7 +1186,7 @@ def _no_fact_broadcast_build(p: str, fact: str = "lineitem") -> None:
 
 
 def test_tpch02_single_fact_pass(spark, sf_dir):
-    """r15 Q2 rewrite (tools/ab_tpch02.py): the pruned offer list is
+    """r15 Q2 rewrite (tools/ab_tpch02.py @ 801c9f9): the pruned offer list is
     aggregated ONCE to the (part, supplier) min grain and persisted
     (the Q11/Q15 multi-reference discipline) — Catalyst's exchange
     reuse does not fire across the differently-pruned references, so
@@ -1207,7 +1207,7 @@ def test_tpch02_single_fact_pass(spark, sf_dir):
 
 
 def test_tpch10_aggregate_below_customer_join(spark, sf_dir):
-    """r15 Q10 rewrite (tools/ab_tpch10.py, guide §2.3): revenue
+    """r15 Q10 rewrite (tools/ab_tpch10.py @ 801c9f9, guide §2.3): revenue
     aggregates per o_custkey BELOW the customer join (the Q13
     discipline) — `rev_c` exists only in that form; the r14 fact-first
     plan instead broadcast the R-filtered LINEITEM as a build side

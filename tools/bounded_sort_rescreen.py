@@ -3,7 +3,7 @@
 
 The r14 screen (134 candidates, 21 taken) used "grain bounded by
 construction" as the filter but — as Q-TPCH-16 showed (r15
-continuation, tools/ab_tpch16.py) — rejected at least one query whose
+continuation, tools/ab_tpch16.py @ 801c9f9) — rejected at least one query whose
 unbounded-looking work runs BELOW the coalesce point and stays
 parallel. The real eligibility condition (plans/scale.bounded_sort):
 

@@ -21,7 +21,6 @@ import tempfile
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 sys.path.insert(0, os.path.join(_REPO_ROOT, "tools"))
-os.chdir(_REPO_ROOT)
 from pyspark.sql import functions as F
 from suite_scale import (KEY_SHIFT, SHARED, _REP_KEYS, duck_con_for, run_suite)
 from dask_xgboost_spark.registry import load_all
@@ -30,34 +29,42 @@ from dask_xgboost_spark.sources import load
 
 REP = 1000
 sf_dir = "/root/testdata/sf0.1"
-# multi-GB shuffles across 32 executor threads in ONE JVM: default to
-# the documented 64g pin heap (an explicit SPARK_GRAFT_DRIVER_MEM wins)
-spark = get_spark(app_name="suite-scale-1000x", driver_mem_default="64g")
-spark.sparkContext.setLogLevel("ERROR")
-out = tempfile.mkdtemp(prefix="dxs_suite_1000x_")
-try:
-    for t in SHARED:
-        src = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(src):
-            os.symlink(src, f"{out}/{t}.parquet")
-    reps = spark.range(REP).select(F.col("id").alias("r"))
-    for t, key in _REP_KEYS.items():
-        df = load(spark, sf_dir, t)
-        (
-            df.repartition(32)
-            .crossJoin(reps)
-            .withColumn(key, F.col(key) + F.col("r") * KEY_SHIFT)
-            .drop("r")
-            .write.mode("overwrite")
-            .parquet(f"{out}/{t}.parquet")
-        )
-    print("replica built", flush=True)
-    con = duck_con_for(out)
-    s, d, per = run_suite(spark, con, load_all(), out, runs=2)
-    worst = sorted(per.items(), key=lambda kv: -kv[1]["spark"])[:5]
-    print(f"1000x suite  spark={s}s  duckdb={d}s  ratio={s/d:.2f}x  "
-          "worst-abs: " + ", ".join(f"{k} {v['spark']}/{v['duckdb']}s" for k, v in worst), flush=True)
-    con.close()
-finally:
-    shutil.rmtree(out, ignore_errors=True)
-spark.stop()
+
+
+def main():
+    os.chdir(_REPO_ROOT)
+    # multi-GB shuffles across 32 executor threads in ONE JVM: default to
+    # the documented 64g pin heap (an explicit SPARK_GRAFT_DRIVER_MEM wins)
+    spark = get_spark(app_name="suite-scale-1000x", driver_mem_default="64g")
+    spark.sparkContext.setLogLevel("ERROR")
+    out = tempfile.mkdtemp(prefix="dxs_suite_1000x_")
+    try:
+        for t in SHARED:
+            src = f"{sf_dir}/{t}.parquet"
+            if os.path.exists(src):
+                os.symlink(src, f"{out}/{t}.parquet")
+        reps = spark.range(REP).select(F.col("id").alias("r"))
+        for t, key in _REP_KEYS.items():
+            df = load(spark, sf_dir, t)
+            (
+                df.repartition(32)
+                .crossJoin(reps)
+                .withColumn(key, F.col(key) + F.col("r") * KEY_SHIFT)
+                .drop("r")
+                .write.mode("overwrite")
+                .parquet(f"{out}/{t}.parquet")
+            )
+        print("replica built", flush=True)
+        con = duck_con_for(out)
+        s, d, per = run_suite(spark, con, load_all(), out, runs=2)
+        worst = sorted(per.items(), key=lambda kv: -kv[1]["spark"])[:5]
+        print(f"1000x suite  spark={s}s  duckdb={d}s  ratio={s/d:.2f}x  "
+              "worst-abs: " + ", ".join(f"{k} {v['spark']}/{v['duckdb']}s" for k, v in worst), flush=True)
+        con.close()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()
