@@ -25,7 +25,8 @@ Re-expresses the reference's entire ML surface on Spark:
   running predictions; MLlib held its cached tree points in the JVM.
 - ``predict(model, df)`` mirrors ``dask_xgboost.predict``
   (core.py:340-384): lazy, per-partition, model broadcast by Spark
-  (replacing closure serialization of the Booster, core.py:367).
+  (replacing closure serialization of the Booster, core.py:367). Local
+  input is scored on the driver by MLlib's own code in no Spark job.
 - ``XGBRegressor`` / ``XGBClassifier`` mirror the sklearn-style
   estimators (core.py:387-631) including param-name translation,
   class discovery (core.py:561-566, one Spark job with no shuffle) and
@@ -395,59 +396,55 @@ def _fit_one_vs_rest(base, df: DataFrame, num_class: int):
     return ovr._copyValues(OneVsRestModel(models))
 
 
-def _local_features_frame(data):
-    """Local numpy array / pandas frame / list-of-rows → (Spark frame with
-    ``features`` vector + ``_row_idx`` order column, row count)."""
+def _local_features_frame(data, num_features: int) -> DataFrame | None:
+    """Local numpy array / pandas frame / list of rows / scipy CSR matrix
+    → a driver-local Spark frame with one ``features`` vector column, in
+    input order, or None for an empty batch. The width is checked against
+    the model's ``num_features`` before any Spark call.
+
+    Dense input becomes one Arrow fixed-size-list column: Spark turns an
+    Arrow table into a ``LocalRelation`` whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. CSR input becomes
+    ``SparseVector`` rows, never densified (reference accepts csr_matrix
+    blocks, core.py:67-70 / test_core.py:415-441)."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
+    from pyspark.ml.functions import array_to_vector
+    from pyspark.ml.linalg import SparseVector, VectorUDT
     from pyspark.sql import SparkSession
+    from pyspark.sql.types import StructField, StructType
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("local-data predict needs an active SparkSession")
     try:
         import scipy.sparse as ss
     except ImportError:  # same guard as the reference (core.py:23-26)
         ss = None
-    if ss is not None and ss.issparse(data):
-        # local CSR in → SparseVector rows, never densified (reference
-        # accepts csr_matrix blocks, core.py:67-70 / test_core.py:415-441)
-        csr = data.tocsr()
-        n, dim = csr.shape
-        pdf = pd.DataFrame(
-            {
-                "_row_idx": range(n),
-                "size": [dim] * n,
-                "indices": [
-                    csr.indices[csr.indptr[r]:csr.indptr[r + 1]].tolist()
-                    for r in range(n)
-                ],
-                "values": [
-                    csr.data[csr.indptr[r]:csr.indptr[r + 1]].astype(
-                        "float64"
-                    ).tolist()
-                    for r in range(n)
-                ],
-            }
+    sparse = ss is not None and ss.issparse(data)
+    data = data.tocsr() if sparse else np.asarray(data, dtype="float64")
+    if data.ndim != 2:
+        raise ValueError(f"expected 2-D feature data, got shape {data.shape}")
+    n, dim = data.shape
+    if dim != num_features:
+        raise ValueError(
+            f"local input has {dim} features, the model expects {num_features}"
         )
-        sdf = spark.createDataFrame(
-            pdf, "_row_idx long, size int, indices array<int>, values array<double>"
+    if n == 0:
+        return None
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError("local-data predict needs an active SparkSession")
+    if sparse:
+        ptr = data.indptr
+        rows = [SparseVector(dim, data.indices[a:b], data.data[a:b])
+                for a, b in zip(ptr[:-1], ptr[1:])]
+        return spark.createDataFrame(
+            pd.DataFrame({FEATURES_COL: rows}),
+            StructType([StructField(FEATURES_COL, VectorUDT())]),
         )
-        return (
-            sparse_features(sdf).drop("size", "indices", "values"),
-            n,
-        )
-    if isinstance(data, pd.DataFrame):
-        arr = data.to_numpy(dtype="float64")
-    else:
-        arr = np.asarray(data, dtype="float64")
-    if arr.ndim != 2:
-        raise ValueError(f"expected 2-D feature data, got shape {arr.shape}")
-    pdf = pd.DataFrame(
-        {"_row_idx": range(len(arr)), "_arr": [row.tolist() for row in arr]}
+    arr = pa.FixedSizeListArray.from_arrays(data.ravel(), dim)
+    return spark.createDataFrame(pa.table({"_arr": arr})).select(
+        array_to_vector("_arr").alias(FEATURES_COL)
     )
-    sdf = spark.createDataFrame(pdf)
-    return assemble_features(sdf, feature_col="_arr").drop("_arr"), len(arr)
 
 
 def _maybe_impute(model, df: DataFrame) -> DataFrame:
@@ -461,34 +458,63 @@ def _maybe_impute(model, df: DataFrame) -> DataFrame:
     return apply_impute(df, missing, model._impute_means)
 
 
+def _proba(model, df: DataFrame):
+    """(frame, class-probability column) for an imputed ``df``: MLlib's
+    ``probability`` vector for a binary model, the renormalized per-class
+    probabilities of ``_ovr_proba_frame`` for a ``OneVsRestModel``."""
+    from pyspark.ml.functions import vector_to_array
+
+    if hasattr(model, "models"):
+        return _ovr_proba_frame(model, df), F.col("_ovr_proba")
+    return model.transform(df), vector_to_array("probability")
+
+
+def _predict_local(model, data, proba: bool = False):
+    """Local batch → predictions ``(n,)`` or class probabilities
+    ``(n, k)`` as numpy, with no Spark job (reference core.py:378-382:
+    local in → local out). The optimizer folds MLlib's transform into the
+    lifted ``LocalRelation`` (``ConvertToLocalRelation``), so MLlib's own
+    code scores the rows on the driver, and ``collect`` of the resulting
+    local table scan returns them in input order without running a job.
+    k is 2, or the number of OvR models."""
+    import numpy as np
+
+    ovr = hasattr(model, "models")
+    sdf = _local_features_frame(data, (model.models[0] if ovr else model).numFeatures)
+    rows = []
+    if sdf is not None:
+        sdf = _maybe_impute(model, sdf)
+        out, col = _proba(model, sdf) if proba else (model.transform(sdf), F.col("prediction"))
+        rows = out.select(col).collect()  # bounded: the input was a local array
+    k = len(model.models) if ovr else 2
+    return np.array([r[0] for r in rows], dtype="float64").reshape((-1, k) if proba else -1)
+
+
 def predict(model, data, features_col: str = FEATURES_COL):
     """Distributed inference (reference predict, core.py:340-384):
     ``model.transform`` adds prediction/probability columns; nothing runs
     until an action — same laziness the reference documents (P7).
 
     Like the reference (core.py:378-382), non-distributed input is also
-    accepted: a numpy 2-D array / pandas frame / list of feature rows is
-    lifted into a Spark frame and the predictions come back as a local
-    numpy array (local in → local out).
+    accepted: a numpy 2-D array / pandas frame / list of feature rows /
+    scipy CSR matrix is scored on the driver and the predictions come back
+    as a local numpy array (local in → local out, ``_predict_local``).
 
     If the model was trained with a ``missing`` sentinel, the same
     training-frame means are applied here (see ``_maybe_impute``).
     """
-    import numpy as np
-
-    if isinstance(data, DataFrame):
-        if features_col != FEATURES_COL:
-            data = data.withColumnRenamed(features_col, FEATURES_COL)
-        return model.transform(_maybe_impute(model, data))
-    sdf, _ = _local_features_frame(data)
-    sdf = _maybe_impute(model, sdf)
-    out = model.transform(sdf).select("_row_idx", "prediction").orderBy("_row_idx")
-    # bounded: local-predict API contract — input was a local array
-    return np.asarray(out.toPandas()["prediction"], dtype="float64")
+    if not isinstance(data, DataFrame):
+        return _predict_local(model, data)
+    if features_col != FEATURES_COL:
+        data = data.withColumnRenamed(features_col, FEATURES_COL)
+    return model.transform(_maybe_impute(model, data))
 
 
-class XGBRegressor:
-    """sklearn-style facade (reference core.py:387-484)."""
+class _XGBModel:
+    """The sklearn-style facade both estimators share (reference
+    core.py:387-631); a subclass names its default ``_objective``."""
+
+    _objective: str
 
     def __init__(
         self,
@@ -499,7 +525,7 @@ class XGBRegressor:
         **kwargs: Any,
     ):
         self.params = {
-            "objective": "reg:squarederror",
+            "objective": self._objective,
             "n_estimators": n_estimators,
             "max_depth": max_depth,
             "learning_rate": learning_rate,
@@ -507,6 +533,56 @@ class XGBRegressor:
             **kwargs,
         }
         self.model_ = None
+
+    def _fit(self, params, df, label_col, sample_weight_col, eval_df, sample_weight_eval_set):
+        """``train`` and, after a fit with an eval set, the reference's
+        early-stopping attributes (core.py:477-479): ``best_iteration`` is
+        the argmin of the validation loss in ``evals_result_`` and
+        ``best_ntree_limit`` is xgboost's best_iteration + 1. Early stopping
+        keeps the trees up to the best loss and the history covers exactly
+        those, so ``best_ntree_limit`` is the model's tree count."""
+        self.evals_result_: dict = {}
+        self.model_ = train(
+            params, df, label_col=label_col, sample_weight_col=sample_weight_col,
+            eval_df=eval_df, sample_weight_eval_set=sample_weight_eval_set,
+            evals_result=self.evals_result_,
+        )
+        history = self.evals_result_.get("validation_0", {}).get("loss", [])
+        if eval_df is not None and history:
+            self.best_score = min(history)
+            self.best_iteration = history.index(self.best_score)
+            self.best_ntree_limit = self.best_iteration + 1
+        return self
+
+    def predict(self, df):
+        """Predictions; for a classifier the hard labels (reference
+        core.py:617-624: argmax / 0.5 threshold — both already inside
+        MLlib's ``prediction`` column). Local input returns a local numpy
+        array (reference core.py:378-382)."""
+        if not isinstance(df, DataFrame):
+            return predict(self.model_, df)
+        return predict(self.model_, df).select(*df.columns, "prediction")
+
+    @property
+    def feature_importances_(self):
+        """Per-feature importances as a numpy array (reference asserts
+        this attribute, test_core.py:57): MLlib's impurity-based
+        ``featureImportances``; multiclass (OneVsRest) → mean of the
+        per-class binary models' importances."""
+        import numpy as np
+
+        model = self.model_
+        if model is None:
+            raise AttributeError("model is not fitted")
+        if hasattr(model, "models"):
+            return np.mean([m.featureImportances.toArray() for m in model.models], axis=0)
+        return np.asarray(model.featureImportances.toArray())
+
+
+class XGBRegressor(_XGBModel):
+    """sklearn-style facade (reference core.py:387-484)."""
+
+    _objective = "reg:squarederror"
 
     def fit(
         self,
@@ -516,34 +592,12 @@ class XGBRegressor:
         eval_df: DataFrame | None = None,
         sample_weight_eval_set: list[str] | None = None,
     ):
-        self.evals_result_: dict = {}
-        self.model_ = train(
-            self.params,
-            df,
-            label_col=label_col,
-            sample_weight_col=sample_weight_col,
-            eval_df=eval_df,
-            sample_weight_eval_set=sample_weight_eval_set,
-            evals_result=self.evals_result_,
+        return self._fit(
+            self.params, df, label_col, sample_weight_col, eval_df, sample_weight_eval_set
         )
-        _stamp_best_attrs(self, eval_df)
-        return self
-
-    def predict(self, df):
-        if not isinstance(df, DataFrame):
-            # local in → local numpy out (reference core.py:378-382)
-            return predict(self.model_, df)
-        return predict(self.model_, df).select(*df.columns, "prediction")
-
-    @property
-    def feature_importances_(self):
-        """Per-feature importances as a numpy array (reference asserts
-        this attribute, test_core.py:57); MLlib's impurity-based
-        ``featureImportances`` vector."""
-        return _feature_importances(self.model_)
 
 
-class XGBClassifier:
+class XGBClassifier(_XGBModel):
     """sklearn-style facade (reference core.py:487-631).
 
     Class discovery runs ``distinct_labels`` (reference core.py:561-566:
@@ -552,24 +606,8 @@ class XGBClassifier:
     multi:softprob (core.py:580-586).
     """
 
-    def __init__(
-        self,
-        n_estimators: int = 100,
-        max_depth: int = 3,
-        learning_rate: float = 0.1,
-        random_state: int = 42,
-        **kwargs: Any,
-    ):
-        self.params = {
-            "objective": "binary:logistic",
-            "n_estimators": n_estimators,
-            "max_depth": max_depth,
-            "learning_rate": learning_rate,
-            "random_state": random_state,
-            **kwargs,
-        }
-        self.model_ = None
-        self.classes_: list[int] | None = None
+    _objective = "binary:logistic"
+    classes_: list[int] | None = None
 
     def fit(
         self,
@@ -595,26 +633,9 @@ class XGBClassifier:
         # on the trained model (core.py:262-264, 580-586)
         self.objective_ = params["objective"]
         self.n_classes_ = len(classes)
-        self.evals_result_: dict = {}
-        self.model_ = train(
-            params,
-            df,
-            label_col=label_col,
-            sample_weight_col=sample_weight_col,
-            eval_df=eval_df,
-            sample_weight_eval_set=sample_weight_eval_set,
-            evals_result=self.evals_result_,
+        return self._fit(
+            params, df, label_col, sample_weight_col, eval_df, sample_weight_eval_set
         )
-        _stamp_best_attrs(self, eval_df)
-        return self
-
-    def predict(self, df):
-        """Hard labels (reference core.py:617-624: argmax / 0.5 threshold —
-        both already inside MLlib's ``prediction`` column). Local input
-        returns a local numpy array (reference core.py:378-382)."""
-        if not isinstance(df, DataFrame):
-            return predict(self.model_, df)
-        return predict(self.model_, df).select(*df.columns, "prediction")
 
     def predict_proba(self, df):
         """Probabilities as array<double> (reference core.py:626-631).
@@ -623,40 +644,12 @@ class XGBClassifier:
         OneVsRestClassifier convention — each binary model's P(class|x),
         renormalized to 1; argmax agrees with ``predict`` because the
         per-model probability is the same monotone transform of the raw
-        margin OvR itself argmaxes over). Local input returns an
-        (n, n_classes) numpy array."""
-        import numpy as np
-
-        from pyspark.ml.functions import vector_to_array
-
-        local = not isinstance(df, DataFrame)
-        sdf = _local_features_frame(df)[0] if local else df
-        out = predict(self.model_, sdf)
-        if "probability" in out.columns:
-            proba = vector_to_array("probability")
-        elif hasattr(self.model_, "models"):
-            out = _ovr_proba_frame(self.model_, _maybe_impute(self.model_, sdf))
-            proba = F.col("_ovr_proba")
-        else:
-            raise NotImplementedError(
-                "predict_proba requires a probabilistic backend"
-            )
-        if local:
-            pdf = (
-                out.select("_row_idx", proba.alias("proba"))
-                .orderBy("_row_idx")
-                .toPandas()  # bounded: local-predict API contract
-            )
-            return np.array(pdf["proba"].tolist(), dtype="float64")
+        margin OvR itself argmaxes over). Local input returns an (n, k)
+        numpy array, k = 2 or the number of OvR models."""
+        if not isinstance(df, DataFrame):
+            return _predict_local(self.model_, df, proba=True)
+        out, proba = _proba(self.model_, _maybe_impute(self.model_, df))
         return out.select(*df.columns, proba.alias("proba"))
-
-    @property
-    def feature_importances_(self):
-        """Per-feature importances as a numpy array (reference asserts
-        this attribute on the classifier, test_core.py:57). Binary →
-        MLlib ``featureImportances``; multiclass (OneVsRest) → mean of
-        the per-class binary models' importances."""
-        return _feature_importances(self.model_)
 
 
 def distinct_labels(df: DataFrame, label_col: str) -> list[float]:
@@ -693,40 +686,5 @@ def _ovr_proba_frame(model, df: DataFrame) -> DataFrame:
         cols.append(F.element_at(vector_to_array(f"_ovr_p_{i}"), 2))
     total = sum(cols[1:], cols[0])
     arr = F.array(*[c / total for c in cols])
-    drop = [c for c in out.columns if c.startswith("_ovr_pred_")
-            or c.startswith("_ovr_raw_") or c.startswith("_ovr_p_")]
+    drop = [c for c in out.columns if c.startswith(("_ovr_pred_", "_ovr_raw_", "_ovr_p_"))]
     return out.withColumn("_ovr_proba", arr).drop(*drop)
-
-
-def _stamp_best_attrs(est, eval_df) -> None:
-    """Mirror the reference's early-stopping attributes (core.py:477-479:
-    ``best_score`` / ``best_iteration`` / ``best_ntree_limit`` stamped on
-    the estimator after fitting with an eval set). Here the eval history
-    comes from ``evals_result_``, ``best_iteration`` is the argmin of the
-    per-iteration validation loss, and ``best_ntree_limit`` follows
-    xgboost's convention of best_iteration + 1. Early stopping keeps the
-    trees up to the best loss and the history covers exactly those, so
-    ``best_ntree_limit`` is the model's tree count."""
-    if eval_df is None:
-        return
-    history = est.evals_result_.get("validation_0", {}).get("loss", [])
-    if not history:
-        return
-    est.best_score = min(history)
-    est.best_iteration = history.index(est.best_score)
-    est.best_ntree_limit = est.best_iteration + 1
-
-
-def _feature_importances(model):
-    import numpy as np
-
-    if model is None:
-        raise AttributeError("model is not fitted")
-    if hasattr(model, "featureImportances"):
-        return np.asarray(model.featureImportances.toArray())
-    if hasattr(model, "models"):  # OneVsRestModel: average the OvR binaries
-        return np.mean(
-            [np.asarray(m.featureImportances.toArray()) for m in model.models],
-            axis=0,
-        )
-    raise AttributeError(f"{type(model).__name__} exposes no featureImportances")

@@ -242,6 +242,21 @@ def test_local_data_predict_matches_distributed(spark, emb):
     assert np.allclose(proba.sum(axis=1), 1.0)
     assert ((proba[:, 1] > 0.5) == (got == 1.0)).all()
 
+    # every row's probabilities equal the distributed path's for its id,
+    # bit for bit, with the lifted request spread over several Arrow
+    # batches, so a row-order slip between batches would show
+    rows = emb.orderBy("vec_id").toPandas()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        proba = clf.predict_proba(np.array(rows["embedding"].tolist(), dtype="float64"))
+    finally:
+        spark.conf.set(key, before)
+    dist = clf.predict_proba(emb).select("vec_id", "proba").orderBy("vec_id").toPandas()
+    assert (dist["vec_id"] == rows["vec_id"]).all() and len(rows) > 64 * 3
+    assert np.array_equal(proba, np.array(dist["proba"].tolist(), dtype="float64"))
+
 
 def test_weighted_eval_history_differs(spark, emb):
     # reference core.py:138-151 + test_core.py:166-170: eval-set weights
@@ -528,7 +543,7 @@ def test_sparse_struct_rejects_bad_fields(spark):
         assemble_features(df, feature_col="sp")
 
 
-def test_scipy_csr_local_predict():
+def test_scipy_csr_local_predict(spark):
     """Local CSR in → local predictions out (reference predict on
     csr_matrix partitions, core.py:378-384). Skips where scipy is absent —
     the distributed sparse path is covered above either way."""
@@ -538,13 +553,15 @@ def test_scipy_csr_local_predict():
     from dask_xgboost_spark.ml.core import _local_features_frame
 
     X = np.eye(6, dtype="float64") * 3.0
-    sdf, n = _local_features_frame(scipy_sparse.csr_matrix(X))
-    assert n == 6
-    v = sdf.orderBy("_row_idx").select("features").collect()[2]["features"]
+    rows = _local_features_frame(scipy_sparse.csr_matrix(X), 6).collect()
+    assert len(rows) == 6
+    v = rows[2]["features"]
     from pyspark.ml.linalg import SparseVector
 
     assert isinstance(v, SparseVector)
     assert v[2] == 3.0 and v.numNonzeros() == 1
+    # collected in input order: row i holds its one value at slot i
+    assert [r["features"].indices.tolist() for r in rows] == [[i] for i in range(6)]
 
 
 # ---------------------------------------------------------------------------
@@ -817,6 +834,74 @@ def test_binary_fit_runs_two_spark_jobs(spark, emb):
     clf, jobs = _spark_jobs(spark, "multiclass-fit-job-count", lambda: XGBClassifier(
         n_estimators=2, max_depth=3, learning_rate=0.3).fit(ym, label_col="ym"))
     assert clf.n_classes_ == 10 and jobs == 11
+
+
+@pytest.fixture(scope="module")
+def served(spark, emb):
+    """A local request and the models local serving answers it with:
+    binary, 3-class (OvR), regression, and binary trained with a
+    ``missing`` sentinel."""
+    import numpy as np
+
+    X = np.array(emb.orderBy("vec_id").limit(64).toPandas()["embedding"].tolist(), dtype="float64")
+    small = dict(n_estimators=2, max_depth=2)
+    ym = emb.withColumn("ym", (F.col("label") % 3).cast("double"))
+    return X, {
+        "binary": XGBClassifier(**small).fit(emb, label_col="y", classes=[0.0, 1.0]),
+        "multiclass": XGBClassifier(**small).fit(ym, label_col="ym", classes=[0.0, 1.0, 2.0]),
+        "regression": XGBRegressor(**small).fit(emb, label_col="y"),
+        "missing": train({"objective": "binary:logistic", **small}, emb, label_col="y",
+                         missing=-999.0),
+    }
+
+
+def test_local_predict_runs_no_spark_job(spark, served):
+    # local-serving tripwire: the request becomes a driver-local relation
+    # that MLlib's transform folds into, and collecting it runs no job,
+    # with Arrow for pandas conversion on or off (a row index, a sort and
+    # toPandas ran 3 jobs per request, 9 for 3 classes)
+    X, m = served
+    poisoned = X.copy()
+    poisoned[::3, 0] = -999.0
+    calls = {
+        "predict": lambda: m["binary"].predict(X),
+        "predict_proba": lambda: m["binary"].predict_proba(X),
+        "multiclass-predict_proba": lambda: m["multiclass"].predict_proba(X),
+        "regressor-predict": lambda: m["regression"].predict(X),
+        "missing-predict": lambda: predict(m["missing"], poisoned),
+    }
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            for name, call in calls.items():
+                out, jobs = _spark_jobs(spark, f"local-{name}-arrow-{arrow}", call)
+                assert len(out) == len(X) and jobs == 0, (name, arrow, jobs)
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_local_predict_empty_batch_returns_empty_arrays(spark, served):
+    # k comes from the model: 2, or one column per OvR model
+    import numpy as np
+
+    X, m = served
+    empty = np.empty((0, X.shape[1]))
+    assert m["binary"].predict(empty).shape == (0,)
+    assert m["regression"].predict(empty).shape == (0,)
+    assert m["binary"].predict_proba(empty).shape == (0, 2)
+    assert m["multiclass"].predict_proba(empty).shape == (0, 3)
+
+
+def test_local_predict_rejects_wrong_width(spark, served):
+    # checked against the model's numFeatures before any Spark call, not
+    # left to fail inside MLlib's UDF
+    X, m = served
+    for name, call in [("binary", m["binary"].predict), ("ovr", m["multiclass"].predict_proba)]:
+        with pytest.raises(ValueError, match=f"has 5 features.*expects {X.shape[1]}"):
+            _spark_jobs(spark, f"local-wrong-width-{name}", lambda: call(X[:, :5]))
+        assert not spark.sparkContext.statusTracker().getJobIdsForGroup(f"local-wrong-width-{name}")
 
 
 def test_gbt_subsampling_is_seeded(spark, emb):
