@@ -25,7 +25,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEC = "decimal(18,4)"  # exact carrier for 2-decimal fixture data
-DEC_OUT = "decimal(38,6)"  # canonical output type for decimal sums
 
 
 def c(col: str | Column) -> Column:
@@ -53,23 +52,6 @@ def net_price() -> Column:
 def charge() -> Column:
     """net_price * (1 + l_tax); re-anchored to scale 6 to stay within p=38."""
     return net_price().cast("decimal(18,6)") * one_plus("l_tax")
-
-
-def dsum(expr: str | Column, alias: str) -> Column:
-    """SUM in exact decimal, emitted as the canonical DECIMAL(38,6)."""
-    e = dec(expr) if isinstance(expr, str) else expr
-    return F.sum(e).cast(DEC_OUT).alias(alias)
-
-
-def davg(expr: str | Column, count_col: Column, alias: str) -> Column:
-    """Average as double, derived from a small-unscaled exact decimal sum.
-
-    CAST(SUM(dec) AS DOUBLE) / COUNT — both engines correctly round the
-    decimal→double conversion below 2^53 unscaled, and IEEE division of
-    identical doubles is identical.
-    """
-    e = dec(expr) if isinstance(expr, str) else expr
-    return (F.sum(e).cast("double") / count_col).alias(alias)
 
 
 # --- fixed-point fast path ----------------------------------------------
@@ -107,18 +89,6 @@ def sql_net_price() -> str:
 
 def sql_charge() -> str:
     return f"(CAST({sql_net_price()} AS DECIMAL(18,6)) * (CAST(1 AS DECIMAL(18,4)) + {sql_dec('l_tax')}))"
-
-
-def sql_dsum(x: str, alias: str) -> str:
-    return f"CAST(SUM({sql_dec(x)}) AS DECIMAL(38,6)) AS {alias}"
-
-
-def sql_dsum_expr(expr: str, alias: str) -> str:
-    return f"CAST(SUM({expr}) AS DECIMAL(38,6)) AS {alias}"
-
-
-def sql_davg(x: str, count_sql: str, alias: str) -> str:
-    return f"CAST(SUM({sql_dec(x)}) AS DOUBLE) / {count_sql} AS {alias}"
 
 
 def md5_poly(arg_sql: str, n_terms: int, *, descending: bool = False) -> str:

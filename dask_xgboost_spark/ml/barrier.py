@@ -163,9 +163,10 @@ class Relay:
 
 
 class RankLink:
-    """Rank side of the exchange: one connection to the driver's relay."""
+    """Rank side of the exchange: one rank's connection to the driver's relay."""
 
     def __init__(self, address: tuple[str, int], secret: str, rank: int):
+        self.rank = rank
         self._sock = _connected(socket.create_connection(address, timeout=RELAY_TIMEOUT_S))
         self._sock.sendall(struct.pack(_HELLO, secret.encode(), rank))
 

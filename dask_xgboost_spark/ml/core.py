@@ -8,10 +8,10 @@ Re-expresses the reference's entire ML surface on Spark:
   architecture in Spark terms: one gang-scheduled barrier job
   (core.py:242-253) whose tasks exchange per-level bin histograms
   through a relay the driver hosts per fit, like the reference's Rabit
-  tracker (core.py:39-59). ``reg:*`` and ``binary:*`` are one Spark job
-  per fit, where MLlib's ``.fit()`` runs one per tree level plus three
-  for metadata and split finding. ``multi:*`` is one such fit per class,
-  as MLlib's ``OneVsRest(GBTClassifier)`` would run them. The trees, and
+  tracker (core.py:39-59). Every objective is one Spark job per fit,
+  where MLlib's ``.fit()`` runs one per tree level plus three for
+  metadata and split finding; ``multi:*`` grows in that job one model
+  per class, the models ``OneVsRest(GBTClassifier)`` fits. The trees, and
   the returned ``GBTClassificationModel`` / ``GBTRegressionModel`` /
   ``OneVsRestModel``, are MLlib's (see ``ml/gbt.py`` for the exact
   semantics). The eval history is the validation loss the trainer
@@ -238,14 +238,14 @@ def train(
     """Blocking distributed GBT training (reference train, core.py:268-321).
 
     ``params['objective']`` picks the task exactly like xgboost params, and
-    every task trains with ``gbt.fit``, one barrier job per binary model:
+    every task trains with one ``gbt.fit``, one barrier job:
 
     - ``reg:*`` → a ``GBTRegressionModel``;
     - ``binary:*`` → a ``GBTClassificationModel``; a label other than 0/1
       raises ValueError;
     - ``multi:*`` → a ``OneVsRestModel`` whose model k was fitted on the
       indicator ``label == k``, for k below ``params['num_class']``, or
-      below max label + 1 (one aggregate job) when it is not given. These
+      below the largest training label + 1 when it is not given. These
       are the models MLlib's ``OneVsRest(GBTClassifier)`` fits.
 
     eval_df: validation frame (reference eval_set, core.py:138-151) —
@@ -282,7 +282,7 @@ def train(
     """
     import warnings
 
-    from pyspark.ml.classification import GBTClassifier
+    from pyspark.ml.classification import GBTClassifier, OneVsRest
     from pyspark.ml.regression import GBTRegressor
 
     from dask_xgboost_spark.ml import gbt
@@ -348,17 +348,13 @@ def train(
     if weight_col is not None:
         common["weightCol"] = weight_col
 
+    est = (GBTRegressor if objective.startswith("reg") else GBTClassifier)(**common)
+    if objective.startswith("multi"):
+        est = OneVsRest(classifier=est, featuresCol=features_col, labelCol=label_col)
+        if weight_col is not None:
+            est.setWeightCol(weight_col)
     history: list[float] = []
-    if objective.startswith("reg"):
-        model = gbt.fit(GBTRegressor(**common), fit_df, history)
-    elif objective.startswith("binary"):
-        model = gbt.fit(GBTClassifier(**common), fit_df, history)
-    else:
-        num_class = params.get("num_class")
-        if num_class is None:
-            # OneVsRest's class count: max label + 1
-            num_class = int(df.agg(F.max(label_col)).first()[0]) + 1
-        model = _fit_one_vs_rest(GBTClassifier(**common), fit_df, num_class)
+    model = gbt.fit(est, fit_df, history, params.get("num_class"))
     if impute_means is not None:
         # stamp the imputation contract on the model so predict()/
         # predict_proba() apply the SAME training-frame means
@@ -367,33 +363,6 @@ def train(
     if evals_result is not None and history:
         evals_result["validation_0"] = {"loss": history}
     return model
-
-
-def _fit_one_vs_rest(base, df: DataFrame, num_class: int):
-    """MLlib's ``OneVsRest(classifier=base)`` fit with ``gbt.fit`` as the
-    learner: model k fits the indicator ``label == k`` with the base's
-    weight and validation columns. The k barrier jobs run one after
-    another, since concurrent barrier jobs would each wait for every task
-    slot."""
-    from pyspark.ml.classification import OneVsRest, OneVsRestModel
-
-    from dask_xgboost_spark.ml import gbt
-
-    label = F.col(base.getLabelCol())
-    models = [
-        gbt.fit(
-            base.copy({base.labelCol: "_ovr_y"}),
-            df.withColumn("_ovr_y", F.when(label == float(k), 1.0).otherwise(0.0)),
-        )
-        for k in range(num_class)
-    ]
-    ovr = OneVsRest(
-        classifier=base, featuresCol=base.getFeaturesCol(), labelCol=base.getLabelCol()
-    )
-    if base.isDefined(base.weightCol):
-        ovr.setWeightCol(base.getWeightCol())
-    # the copied ``classifier`` param is what the model's writer saves
-    return ovr._copyValues(OneVsRestModel(models))
 
 
 def _local_features_frame(data, num_features: int) -> DataFrame | None:

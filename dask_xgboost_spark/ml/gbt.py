@@ -1,10 +1,11 @@
 """Histogram GBT in one barrier job, returned as a native MLlib model.
 
-``fit(estimator, df)`` is a drop-in for ``GBTClassifier.fit`` /
-``GBTRegressor.fit``: it reads the estimator's params and returns the same
-``GBTClassificationModel`` / ``GBTRegressionModel`` MLlib would, so
+``fit(estimator, df)`` is a drop-in for ``GBTClassifier.fit``,
+``GBTRegressor.fit`` and ``OneVsRest(classifier=GBTClassifier()).fit``:
+it reads the estimator's params and returns the same MLlib model, so
 predict, serving, save/load, ``featureImportances`` and
-``evaluateEachIteration`` are MLlib's own.
+``evaluateEachIteration`` are MLlib's own. One-vs-rest is one barrier
+job too, growing the class models one after another over the same rows.
 
 Why: MLlib's driver-centred loop runs one Spark job per tree level plus
 three jobs of metadata and split finding (9 jobs for 2 trees of depth 3).
@@ -189,18 +190,20 @@ def _rank(batches, link, cfg: dict) -> None:
     meta = {"rows": int((~v).sum()), "dim": x.shape[1] if len(x) else None, "error": None}
     xt, yt, wt = x[~v], y[~v], w[~v]
     meta["weight"] = float(np.cumsum(wt)[-1]) if len(wt) else 0.0
+    labels = yt[~np.isnan(yt)]  # a null label arrives as NaN
+    meta["max_label"] = float(labels.max()) if len(labels) else None
     if len(w) and not (np.isfinite(w).all() and (w >= 0).all()):
         meta["error"] = "weights must be non-negative and finite"
-    bad = y[~np.isin(y, (0.0, 1.0))] if cfg["classification"] else []
+    bad = y[~np.isin(y, (0.0, 1.0))] if cfg["classification"] and not cfg["ovr"] else []
     if len(bad):
         meta["error"] = (f"GBTClassifier was given a dataset with invalid label "
                          f"{float(bad[0])}; labels must be 0 or 1 for binary classification")
-    fraction = link.exchange(meta)
+    fraction, models = link.exchange(meta)
 
     # split finding: per feature, the distinct nonzero values and their weights
     xs, ws = xt, wt
     if fraction < 1.0:
-        keep = _rng(cfg["seed"], cfg["rank"], 0).random(len(xt)) < fraction
+        keep = _rng(cfg["seed"], link.rank, 0).random(len(xt)) < fraction
         xs, ws = xt[keep], wt[keep]
     summary = []
     for f in range(xs.shape[1]):
@@ -214,16 +217,23 @@ def _rank(batches, link, cfg: dict) -> None:
         x = xt = np.zeros((0, len(thresholds)))
     bt, bv = _bin(xt, thresholds), _bin(x[v], thresholds)
     del x, xt, xs
+    for k in range(models):
+        # one-vs-rest: class k's model fits the indicator label == k
+        yk = np.where(y == k, 1.0, 0.0) if cfg["ovr"] else y
+        if cfg["classification"]:
+            yk = 2.0 * yk - 1.0
+        _boost(link, cfg, n_bins, bt, bv, yk[~v], wt, yk[v], w[v])
+
+
+def _boost(link, cfg: dict, n_bins: int, bt, bv, yt, wt, yv, wv) -> None:
+    """One model's trees over the binned training and validation rows."""
     loss = cfg["loss"]
-    if cfg["classification"]:
-        y = 2.0 * y - 1.0
-    yt, yv, wv = y[~v], y[v], w[v]
     pred, pred_v = np.zeros(len(yt)), np.zeros(len(yv))
     for m in range(cfg["max_iter"]):
         target = yt if m == 0 else _neg_gradient(loss, pred, yt)
         sampled = None
         if cfg["subsampling_rate"] < 1.0:
-            sampled = _rng(cfg["seed"], cfg["rank"], m + 1).random(len(yt)) < cfg["subsampling_rate"]
+            sampled = _rng(cfg["seed"], link.rank, m + 1).random(len(yt)) < cfg["subsampling_rate"]
         node = np.ones(len(yt), dtype=np.int64)
         active, levels = np.array([1]), []
         while True:
@@ -322,7 +332,13 @@ class _Coordinator:
         max_bins = min(cfg["max_bins"], rows)
         required = max(max_bins * max_bins, 10000)
         fraction = required / rows if required < rows else 1.0
-        relay.broadcast(fraction)
+        models = 1
+        if cfg["ovr"]:  # OneVsRest's class count: num_class, or max label + 1
+            labels = [m["max_label"] for m in metas if m["max_label"] is not None]
+            if not (cfg["num_class"] or labels):
+                raise ValueError("one-vs-rest training needs a non-null label")
+            models = cfg["num_class"] or int(max(labels)) + 1
+        relay.broadcast((fraction, models))
 
         summaries = [s for s in relay.gather() if s]
         weighted = fraction * weight
@@ -338,7 +354,11 @@ class _Coordinator:
         self.num_splits = np.array([len(t) for t in thresholds])
         self.min_weight = cfg["min_weight_fraction"] * weight
         relay.broadcast((thresholds, int(self.num_splits.max(initial=0)) + 1))
+        return [self._boost(relay) for _ in range(models)]
 
+    def _boost(self, relay) -> list[dict[int, _Node]]:
+        """One model's trees, stopped early on the validation loss."""
+        cfg = self.cfg
         trees, errors, best_error, best_m = [], [], None, 1
         for m in range(cfg["max_iter"]):
             trees.append(self._grow(relay))
@@ -527,58 +547,65 @@ def _config(est) -> dict:
     }
 
 
-def fit(est, df, history: list | None = None):
-    """Train ``est`` (a ``GBTClassifier`` or ``GBTRegressor``) on ``df``
-    in one barrier job; returns the model MLlib's ``est.fit(df)`` would.
-    Raises ``ValueError`` for classification labels outside {0, 1}.
+def fit(est, df, history: list | None = None, num_class: int | None = None):
+    """Train ``est`` (a ``GBTClassifier``, a ``GBTRegressor`` or a
+    ``OneVsRest`` of a ``GBTClassifier``) on ``df`` in one barrier job;
+    returns the model MLlib's ``est.fit(df)`` would. A ``GBTClassifier``
+    raises ``ValueError`` for labels outside {0, 1}. ``OneVsRest``'s model
+    k fits the indicator ``label == k`` (a null label is negative in every
+    class) for k below ``num_class``, or the largest training label + 1.
 
     With a validation indicator, ``history`` (a list, extended in place)
     receives the validation loss after each kept tree: the weighted mean
     of the estimator's loss that early stopping compares, which is what
-    the model's ``evaluateEachIteration`` on the validation rows reports."""
-    from pyspark.ml.classification import GBTClassificationModel
+    the model's ``evaluateEachIteration`` on the validation rows reports.
+    A one-vs-rest fit reports none."""
+    from pyspark.ml.classification import GBTClassificationModel, OneVsRest, OneVsRestModel
     from pyspark.ml.linalg import VectorUDT
     from pyspark.ml.regression import GBTRegressionModel
     from pyspark.sql import functions as F
 
     from dask_xgboost_spark.ml.barrier import run_barrier
 
-    cfg = _config(est)
-    get = est.getOrDefault
+    ovr = isinstance(est, OneVsRest)
+    base = est.getClassifier() if ovr else est
+    if ovr:  # the columns MLlib's OneVsRest hands its classifier
+        extra = {base.labelCol: "_ovr_y", base.featuresCol: est.getFeaturesCol()}
+        if est.isDefined(est.weightCol) and est.getWeightCol():
+            extra[base.weightCol] = est.getWeightCol()
+        base = base.copy(extra)
+    cfg = {**_config(base), "ovr": ovr, "num_class": num_class}
+    get = base.getOrDefault
     if not isinstance(df.schema[get("featuresCol")].dataType, VectorUDT):
         raise ValueError(f"column {get('featuresCol')!r} must hold MLlib vectors")
-    weight_col = get("weightCol") if est.isDefined(est.weightCol) else None
+    weight_col = get("weightCol") if base.isDefined(base.weightCol) else None
     frame = df.select(
         F.col(get("featuresCol")).alias("f"),
-        F.col(get("labelCol")).cast("double").alias("y"),
+        F.col(est.getLabelCol()).cast("double").alias("y"),
         (F.col(weight_col).cast("double") if weight_col else F.lit(1.0)).alias("w"),
         (F.col(get("validationIndicatorCol")).cast("boolean") if cfg["validate"]
          else F.lit(False)).alias("v"),
     )
     coordinator = _Coordinator(cfg)
-
-    def rank_fn(batches, link):
-        from pyspark import BarrierTaskContext
-
-        _rank(batches, link, {**cfg, "rank": BarrierTaskContext.get().partitionId()})
-
-    trees = run_barrier(frame, rank_fn, coordinator)
-    if history is not None:
+    forest = run_barrier(frame, lambda batches, link: _rank(batches, link, cfg), coordinator)
+    if history is not None and not ovr:
         history.extend(coordinator.history)
     sc = df.sparkSession.sparkContext
-    pruned = [_pruned(nodes, 1, coordinator.thresholds) for nodes in trees]
-    jtrees = _java_trees(sc, pruned, coordinator.num_features)
-    step = cfg["step_size"]
-    jweights = _java_doubles(sc._jvm, [1.0] + [step] * (len(trees) - 1))
     ml = sc._jvm.org.apache.spark.ml
-    if cfg["classification"]:
-        jmodel = ml.classification.GBTClassificationModel(
-            est.uid, jtrees, jweights, coordinator.num_features, 2)
-        model = GBTClassificationModel(jmodel)
-    else:
-        jmodel = ml.regression.GBTRegressionModel(est.uid, jtrees, jweights,
-                                                  coordinator.num_features)
-        model = GBTRegressionModel(jmodel)
-    est._copyValues(model)
-    model._transfer_params_to_java()
-    return model
+    step = cfg["step_size"]
+    models = []
+    for trees in forest:
+        pruned = [_pruned(nodes, 1, coordinator.thresholds) for nodes in trees]
+        jtrees = _java_trees(sc, pruned, coordinator.num_features)
+        jweights = _java_doubles(sc._jvm, [1.0] + [step] * (len(trees) - 1))
+        if cfg["classification"]:
+            model = GBTClassificationModel(ml.classification.GBTClassificationModel(
+                base.uid, jtrees, jweights, coordinator.num_features, 2))
+        else:
+            model = GBTRegressionModel(ml.regression.GBTRegressionModel(
+                base.uid, jtrees, jweights, coordinator.num_features))
+        base._copyValues(model)
+        model._transfer_params_to_java()
+        models.append(model)
+    # the copied ``classifier`` param is what a OneVsRestModel's writer saves
+    return est._copyValues(OneVsRestModel(models)) if ovr else models[0]

@@ -460,36 +460,6 @@ def train_pq_codebook_distributed(
     return codebook
 
 
-def train_pq_codebook(vecs, m: int = 8, k: int = 16, iters: int = 12, seed: int = 7):
-    """Lloyd's k-means per subspace on a local sample → codebook of shape
-    (m, k, d/m). The bounded-sample alternative to
-    ``train_pq_codebook_distributed`` (Faiss-style: train PQ on ~100k
-    sampled vectors no matter the corpus size); kept for codebook
-    training from driver-side data. Deterministic: fixed seed, fixed
-    iteration count, ties broken by lowest centroid index."""
-    import numpy as np
-
-    X = np.asarray(vecs, dtype=np.float64)
-    n, d = X.shape
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub = d // m
-    rng = np.random.default_rng(seed)
-    codebook = np.empty((m, k, sub))
-    for j in range(m):
-        Xj = X[:, j * sub : (j + 1) * sub]
-        C = Xj[rng.choice(n, size=k, replace=False)]
-        for _ in range(iters):
-            d2 = ((Xj[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(k):
-                mask = assign == c
-                if mask.any():
-                    C[c] = Xj[mask].mean(axis=0)
-        codebook[j] = C
-    return codebook
-
-
 @register("L-SIM-07", sql=None, mode="tol")
 def l_sim_07(spark, sf):
     """ANN top-k via product quantization (PQ) + asymmetric distance:

@@ -28,21 +28,3 @@ def executed_plan_string(df: DataFrame) -> str:
     """The AQE-final executed plan (runs the query)."""
     df.collect()  # bounded: diagnostic tooling — caller materializes by contract
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def assert_plan(
-    df: DataFrame,
-    contains: list[str] | None = None,
-    not_contains: list[str] | None = None,
-    executed: bool = False,
-) -> str:
-    """Assert physical-plan properties (pushdown fired, join strategy,
-    no shuffle, ...). Returns the plan text for further inspection."""
-    p = executed_plan_string(df) if executed else explain_string(df)
-    for s in contains or []:
-        if s not in p:
-            raise AssertionError(f"plan missing {s!r}:\n{p[:2000]}")
-    for s in not_contains or []:
-        if s in p:
-            raise AssertionError(f"plan must not contain {s!r}:\n{p[:2000]}")
-    return p

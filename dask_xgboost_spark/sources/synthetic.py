@@ -45,28 +45,3 @@ def make_timeseries(
         (h(2) * 2 - 1).alias("x"),
         (h(3) * 2 - 1).alias("y"),
     )
-
-
-def make_random_features(
-    spark: SparkSession,
-    n_rows: int,
-    n_features: int,
-    seed: int = 42,
-    binary_label: bool = True,
-) -> DataFrame:
-    """Random (features array<double>, label) frame — the Spark analogue of
-    da.random.random + randint (reference test fixtures)."""
-    rng = spark.range(0, n_rows)
-    feats = F.array(
-        *[
-            (
-                F.pmod(F.xxhash64("id", F.lit(seed), F.lit(j)), F.lit(1 << 40))
-                / float(1 << 40)
-            )
-            for j in range(n_features)
-        ]
-    )
-    label = F.pmod(F.xxhash64("id", F.lit(seed + 7)), F.lit(2 if binary_label else 10))
-    return rng.select(
-        F.col("id").alias("row_id"), feats.alias("features"), label.alias("label")
-    )

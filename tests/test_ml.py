@@ -829,11 +829,31 @@ def test_binary_fit_runs_two_spark_jobs(spark, emb):
     _, jobs = _spark_jobs(spark, "missing-fit-job-count", lambda: train(
         {"objective": "binary:logistic", **PARAMS}, emb, label_col="y", missing=-999.0))
     assert jobs == 3
-    # multiclass: class discovery, then one barrier job per class
+    # multiclass: class discovery, then one barrier job that grows every
+    # class's model (one barrier job per class ran 11)
     ym = emb.withColumn("ym", F.col("label").cast("double"))
     clf, jobs = _spark_jobs(spark, "multiclass-fit-job-count", lambda: XGBClassifier(
         n_estimators=2, max_depth=3, learning_rate=0.3).fit(ym, label_col="ym"))
-    assert clf.n_classes_ == 10 and jobs == 11
+    assert clf.n_classes_ == 10 and jobs == 2
+    # train() is the barrier job alone, with num_class or without it,
+    # when the class count comes from the job itself (a max-label
+    # aggregate, then a job per class, ran 12)
+    multi = {"objective": "multi:softprob", **PARAMS, "n_estimators": 2}
+    for extra in ({}, {"num_class": 10}):
+        model, jobs = _spark_jobs(spark, f"multiclass-train-job-count-{len(extra)}",
+                                  lambda: train({**multi, **extra}, ym, label_col="ym"))
+        assert len(model.models) == 10 and jobs == 1
+    # an eval set: the union's shuffle and the barrier job, once for all
+    # classes (22 when each class reshuffled the union)
+    trm = ym.filter(F.col("vec_id") % 5 != 0)
+    vam = ym.filter(F.col("vec_id") % 5 == 0)
+    model, jobs = _spark_jobs(spark, "multiclass-eval-job-count", lambda: train(
+        {**multi, "num_class": 10}, trm, label_col="ym", eval_df=vam))
+    assert len(model.models) == 10 and jobs == 2
+    # a missing sentinel: the imputation means, then the barrier job (14)
+    model, jobs = _spark_jobs(spark, "multiclass-missing-job-count", lambda: train(
+        multi, ym, label_col="ym", missing=-999.0))
+    assert len(model.models) == 10 and jobs == 3
 
 
 @pytest.fixture(scope="module")
@@ -982,6 +1002,23 @@ def test_multiclass_matches_one_vs_rest_and_round_trips(spark, emb, tmp_path):
 
     (p0, r0), (p1, r1) = scores(got), scores(loaded)
     assert np.array_equal(p0, p1) and np.array_equal(r0, r1)
+
+
+def test_multiclass_class_count(spark, emb):
+    # num_class fixes the model count; without it the count is the largest
+    # training label + 1: a validation row's label and a null label add no
+    # class
+    df = emb.withColumn("ym", F.col("label").cast("double"))
+    params = {"objective": "multi:softprob", "n_estimators": 1, "max_depth": 2}
+    assert len(train({**params, "num_class": 4}, df, label_col="ym").models) == 4
+    low = df.filter(F.col("ym") < 7)
+    first = low.agg(F.min("vec_id")).first()[0]
+    low = low.withColumn(
+        "ym", F.when(F.col("vec_id") == first, F.lit(None)).otherwise(F.col("ym")))
+    assert low.filter(F.col("ym").isNull()).count() == 1
+    assert len(train(params, low, label_col="ym").models) == 7
+    model = train(params, low, label_col="ym", eval_df=df.filter(F.col("ym") == 9))
+    assert len(model.models) == 7
 
 
 def test_multiclass_eval_set_only_stops_early(spark, emb):
